@@ -19,7 +19,9 @@ import org.apache.spark.sql.functions._
   * Scale: building version rows is one shuffle on `keyCol` plus a per-key
   * sort; the RANGE frame makes tied timestamps deterministic (every row at
   * the same (key, time) sees the identical cumulative value), after which
-  * duplicates collapse to one version row per change instant.
+  * duplicates collapse to one version row per change instant. The window
+  * partitions on `_entity`, so the dedup and an as-of merge on `_entity`
+  * reuse its exchange.
   */
 final case class VersionedTable(
     df: DataFrame,
@@ -45,11 +47,16 @@ object VersionedTable {
     // CURRENT ROW: all rows with the same (key, time) get the same cumulative
     // value (deterministic under ties), and inclusivity of the current
     // instant matches the reference's as-of semantics (SURVEY §2.5).
-    val w = Window.partitionBy(col(key)).orderBy(col(time))
+    // The window partitions on `_entity` itself, not on `key` aliased next
+    // to it (an alias below the exchange hides its partitioning), so the
+    // dedup and an as-of merge on `_entity` reuse the window's exchange.
+    val w = Window.partitionBy(col("_entity")).orderBy(col("_change_time"))
     val cols =
-      Seq(col(key).as("_entity"), col(time).as("_change_time")) ++
+      Seq(col("_entity"), col("_change_time")) ++
         aggs.map { case (expr, name) => expr.over(w).as(name) }
     val versions = events.df
+      .withColumn("_entity", col(key))
+      .withColumn("_change_time", col(time))
       .select(cols: _*)
       .dropDuplicates("_entity", "_change_time")
     VersionedTable(versions, "_entity", "_change_time", aggs.map(_._2))

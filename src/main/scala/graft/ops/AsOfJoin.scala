@@ -182,7 +182,11 @@ object AsOfJoin {
     * EnsureRequirements (so bucketed/pre-partitioned inputs skip the
     * shuffle entirely, and AQE manages skew), and the join itself is a
     * two-pointer merge per partition. Same semantics as [[asof]] (pinned in
-    * AsOfMergeSpec). */
+    * AsOfMergeSpec). When the probes are [[Examples.generate]] output and
+    * the versioned table is a [[VersionedTable.fromEvents]] table of the
+    * same source, [[graft.plans.PointInTimeRule]] plans the join (and the
+    * chain it extends) as one [[graft.plans.PointInTimePass]] instead
+    * (pinned in PointInTimePassSpec). */
   def asofMerge(
       left: DataFrame,
       leftKey: String,
@@ -194,7 +198,6 @@ object AsOfJoin {
     val overlap = right.valueCols.toSet.intersect(left.columns.toSet)
     require(overlap.isEmpty, s"value columns collide with probe columns: $overlap")
     val spark = left.sparkSession
-    graft.plans.GraftPlanner.ensure(spark)
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val resolver = spark.sessionState.analyzer.resolver
@@ -225,7 +228,7 @@ object AsOfJoin {
       lk, lt, rk, rt,
       right.valueCols.map(attr(rOut, _)),
       inclusive, joinType == "inner")
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, node)
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, graft.plans.GraftPlanner.plan(spark, node))
   }
 
   private def toMicros(t: java.sql.Timestamp): Long =

@@ -49,13 +49,17 @@ case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy mapping the logical node onto the physical merge join.
+/** Planner strategy mapping the logical nodes onto their physical
+  * operators: the as-of merge join and the point-in-time pass.
   * Register per session via [[GraftPlanner.ensure]] (experimental methods)
   * or globally with `spark.sql.extensions=graft.plans.GraftSparkExtensions`. */
 object AsOfStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinNode(l, r, lk, lt, rk, rt, vals, inc, inner) =>
       AsOfMergeJoinExec(lk, lt, rk, rt, vals, inc, inner, planLater(l), planLater(r)) :: Nil
+    case p: PointInTimePass =>
+      PointInTimePassExec(p.key, p.time, p.ties, p.lookback, p.condition, p.examples,
+        p.exampleAttrs, p.wheres, p.offsets, p.values, p.valueAttrs, planLater(p.child)) :: Nil
     case _ => Nil
   }
 }
@@ -66,6 +70,13 @@ object GraftPlanner {
     val em = spark.sessionState.experimentalMethods
     if (!em.extraStrategies.contains(AsOfStrategy))
       em.extraStrategies = em.extraStrategies :+ AsOfStrategy
+  }
+
+  /** A new as-of join, planned: the strategy registered and the
+    * analysis-time rewrites ([[PointInTimeRule]]) applied. */
+  def plan(spark: SparkSession, join: AsOfJoinNode): LogicalPlan = {
+    ensure(spark)
+    PointInTimeRule(join)
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.core.{EventTable, VersionedTable}
-import graft.ops.{AsOfJoin, Examples}
+import graft.core.EventTable
+import graft.ops.Examples
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -59,72 +59,6 @@ object Events {
       labelDelay = "INTERVAL 1 HOUR",
       orderCols = Seq("event_id"))
 
-  /** Flagship: examples as-of-joined to cumulative error value at
-    * _prediction_time and cumulative purchase count at _label_time —
-    * the full reference pipeline shape on real data.
-    *
-    * FUSED single-shuffle formulation (results identical to composing the
-    * generic primitives — the golden test pins the generic path, the
-    * oracle pins this one):
-    *
-    *  1. The feature as-of join (J1) dissolves: its as-of instant is the
-    *     probe row's OWN event time, so the feature value is just the
-    *     running error-cents window column of that row (RANGE frame ==
-    *     inclusive boundary + tie handling).
-    *  2. Example trigger, running error cents, and running purchase count
-    *     all share one partition+order — a single exchange on user_id
-    *     feeds a chained Window pass.
-    *  3. The label-time as-of join (J2) consumes the same stream: purchase
-    *     rows become versions (their running count IS the version value,
-    *     so no dedup is needed — tied rows carry identical values) and
-    *     example rows become probes at ts+1h; the union-merge window
-    *     partitions on an alias of user_id, so Spark's alias-aware
-    *     partitioning propagation inserts NO second shuffle.
-    *
-    * Net: ONE shuffle of the events table for the entire pipeline
-    * (asserted in PlanSpec). At 100 TB, that shuffle is the cost floor. */
-  def flagship(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(s, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .repartition(col("user_id"))
-    val wRows = Window.partitionBy("user_id")
-      .orderBy(col("ts"), col("event_id")).rowsBetween(-1, 0)
-    val wRange = Window.partitionBy("user_id").orderBy(col("ts")) // RANGE ..current
-    val isErr = col("event_type") === "error"
-    val isPurch = col("event_type") === "purchase"
-    val annotated = ev
-      .withColumn("streak", count(when(isErr, lit(1))).over(wRows))
-      .withColumn("err_run", sum(when(isErr, expr("cast(round(value * 100) as bigint)"))).over(wRange))
-      .withColumn("purch_run", count(when(isPurch, lit(1))).over(wRange))
-      .where(isPurch || (isErr && col("streak") === 2))
-
-    val probeStruct = struct(
-      col("user_id").as("_entity"),
-      col("ts").as("_prediction_time"),
-      (col("ts") + expr("INTERVAL 1 HOUR")).as("_label_time"),
-      col("err_run").as("err_cents"))
-    val tagged = annotated.select(
-      col("user_id").as("__k"),
-      when(isPurch, col("ts")).otherwise(col("ts") + expr("INTERVAL 1 HOUR")).as("__t"),
-      when(isPurch, lit(0)).otherwise(lit(1)).as("__side"),
-      when(isPurch, col("purch_run")).as("__val"),
-      when(!isPurch, probeStruct).as("__probe"))
-
-    val wMerge = Window.partitionBy("__k")
-      .orderBy(col("__t").asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("__purchases", last(col("__val"), ignoreNulls = true).over(wMerge))
-      .where(col("__side") === 1)
-      .select(
-        col("__probe._entity").as("_entity"),
-        col("__probe._prediction_time").as("_prediction_time"),
-        col("__probe._label_time").as("_label_time"),
-        col("__probe.err_cents").as("err_cents"),
-        col("__purchases").as("purchases"))
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef("q_examples", Some(examplesSql), (s, dir) => examples(s, dir)),
@@ -141,7 +75,22 @@ object Events {
             WHERE p.user_id = ex._entity AND p.event_type = 'purchase'
               AND p.ts <= ex._label_time) AS purchases
         FROM ex"""),
-      (s, dir) => flagship(s, dir)),
+      // the reference pipeline through the public API, exactly as a user
+      // writes it; the chain plans as one sorted pass per user
+      // (graft.plans.PointInTimePass: one scan, exchange and sort — PlanSpec)
+      (s, dir) => {
+        val g = graft.api.Graft(s)
+        val ev = eventTable(s, dir)
+        val errCents = g.versionedWhere(ev, "event_type = 'error'",
+          "sum(cast(round(value * 100) as bigint))" -> "err_cents")
+        val purchases = g.versionedWhere(ev, "event_type = 'purchase'", "count(1)" -> "purchases")
+        val ex = g.examples(ev,
+          windowAgg = "count(case when event_type = 'error' then 1 end)",
+          lookback = 1, trigger = "= 2", labelDelay = "INTERVAL 1 HOUR",
+          orderCols = Seq("event_id"))
+        g.pointInTimeJoin(
+          g.pointInTimeJoin(ex, "_prediction_time", errCents), "_label_time", purchases)
+      }),
 
     // ---- STREAMING flagship through the correctness gate -----------------
     // The whole reference pipeline as a REAL streaming query

@@ -51,19 +51,17 @@ class BpeEncodeSpec extends AnyFunSuite with SparkSpec {
     // single-row-group local file to core parallelism (no-op at scale)
     // and is the only exchange allowed — any hash/range exchange or join
     // would mean the encode recomputes per-key state.
-    // inspect plan NODES, not the plan string: a regex over the string
-    // also matches ReusedExchange ("Exchange " substring), which would
-    // falsely fail on a reused round-robin exchange
-    val exec = graft.ext.TextOps.bpeEncode(docs, k = 2)
-      .queryExecution.executedPlan
-    val plan = exec.toString()
-    val keyExchanges = exec.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-        if !e.outputPartitioning.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] => e
-    }
+    // inspect plan NODES through the adaptive root (planNodes), not the
+    // plan string: a regex over the string also matches ReusedExchange
+    val enc = graft.ext.TextOps.bpeEncode(docs, k = 2)
+    val plan = enc.queryExecution.executedPlan.toString()
+    val exchanges = nodesOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec](enc)
+    assert(exchanges.nonEmpty, s"the spread exchange is missing:\n$plan")
+    val keyExchanges = exchanges.filterNot(_.outputPartitioning.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning])
     assert(keyExchanges.isEmpty, s"encode plan shuffles on a key:\n$plan")
-    assert(!plan.contains("Join"), s"encode plan joins:\n$plan")
+    assert(nodesOf[org.apache.spark.sql.execution.joins.BaseJoinExec](enc).isEmpty,
+      s"encode plan joins:\n$plan")
   }
 
   test("real docs: per-doc subtoken sum equals the vocabulary-join replay") {

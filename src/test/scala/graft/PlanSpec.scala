@@ -1,10 +1,13 @@
 package graft
 
-import graft.core.VersionedTable
+import graft.api.Graft
+import graft.core.{EventTable, VersionedTable}
 import graft.ops.AsOfJoin
+import graft.plans.{AsOfMergeJoinExec, PointInTimePass, PointInTimePassExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions — the properties that make the engine viable at
@@ -48,10 +51,104 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2)
   }
 
+  test("planNodes sees through the adaptive root, before and after execution") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(100).repartition(3, col("id")).selectExpr("id + 1 AS x")
+    val root = df.queryExecution.executedPlan
+    assert(root.isInstanceOf[AdaptiveSparkPlanExec], root.toString)
+    // a plain collect stops at the adaptive root, a leaf
+    assert(root.collect { case e: ShuffleExchangeExec => e }.isEmpty)
+    assert(nodesOf[ShuffleExchangeExec](df).size === 1, root.toString)
+    df.collect() // final plan: the exchange now sits inside a query stage
+    assert(nodesOf[ShuffleExchangeExec](df).size === 1,
+      df.queryExecution.executedPlan.toString)
+  }
+
+  // ---- the paper's pipeline through the public API ---------------------
+
+  private def flagshipPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.take(4000)
+
   test("fused flagship pipeline is a single shuffle of the events table") {
+    // q_flagship is the public-API pipeline; the pass makes it one scan,
+    // one shuffle, one sort and one walk per key
     val df = graft.queries.Registry.queries("q_flagship")(spark, sfDir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert("\\bExchange\\b".r.findAllIn(plan).size === 1, plan.take(3000))
+    val plan = flagshipPlan(df)
+    assert(nodesOf[ShuffleExchangeExec](df).size === 1, plan)
+    assert(nodesOf[SortExec](df).size === 1, plan)
+    assert(nodesOf[FileSourceScanExec](df).size === 1, plan)
+    assert(nodesOf[PointInTimePassExec](df).size === 1, plan)
+    assert(nodesOf[WindowExec](df).isEmpty, plan)
+    assert(nodesOf[AsOfMergeJoinExec](df).isEmpty, plan)
+  }
+
+  /** events -> examples -> as-of joins on error cents and purchases. */
+  private def pipeline(
+      events: EventTable, purchasesFrom: EventTable, inclusive: Boolean) = {
+    val g = Graft(spark)
+    val err = g.versionedWhere(events, "event_type = 'error'",
+      "sum(cast(round(value * 100) as bigint))" -> "err_cents")
+    val pur = g.versionedWhere(purchasesFrom, "event_type = 'purchase'", "count(1)" -> "purchases")
+    val ex = g.examples(events, "count(case when event_type = 'error' then 1 end)",
+      lookback = 1, trigger = "= 2", labelDelay = "INTERVAL 1 HOUR", orderCols = Seq("event_id"))
+    g.pointInTimeJoin(g.pointInTimeJoin(ex, "_prediction_time", err, inclusive = inclusive),
+      "_label_time", pur, inclusive = inclusive)
+  }
+
+  private def keepsComposedPlan(df: org.apache.spark.sql.DataFrame, merges: Int): Unit = {
+    val plan = flagshipPlan(df)
+    assert(nodesOf[AsOfMergeJoinExec](df).size === merges, plan)
+    assert(nodesOf[WindowExec](df).nonEmpty, plan)
+  }
+
+  test("an exclusive as-of keeps the composed plan, one exchange per window") {
+    val ev = EventTable(graft.sources.Tables.events(spark, sfDir), "ts", Some("user_id"))
+    val df = pipeline(ev, ev, inclusive = false)
+    keepsComposedPlan(df, merges = 2)
+    assert(nodesOf[PointInTimePassExec](df).isEmpty, flagshipPlan(df))
+    // examples, error cents, purchases: one window pass each; the dedup
+    // and both merges reuse the versioned tables' exchanges
+    assert(nodesOf[WindowExec](df).size === 3, flagshipPlan(df))
+    assert(nodesOf[ShuffleExchangeExec](df).size === 3, flagshipPlan(df))
+  }
+
+  test("versioned tables the pass cannot read keep their merge") {
+    // two sources of one shape and different rows
+    val events = graft.sources.Tables.events(spark, sfDir)
+    def local(n: Int) = spark.createDataFrame(events.limit(n).collectAsList(), events.schema)
+    val ev = EventTable(local(300), "ts", Some("user_id"))
+    val other = EventTable(local(200), "ts", Some("user_id"))
+    val df = pipeline(ev, other, inclusive = true)
+    // the first join (same source) fuses; the second stays a merge
+    keepsComposedPlan(df, merges = 1)
+    assert(nodesOf[PointInTimePassExec](df).size === 1, flagshipPlan(df))
+    // an imperative aggregate has no declarative buffer to run
+    val g = Graft(spark)
+    val ex = g.examples(ev, "count(case when event_type = 'error' then 1 end)",
+      lookback = 1, trigger = "= 2", labelDelay = "INTERVAL 1 HOUR")
+    val lists = g.versionedWhere(ev, "event_type = 'error'", "collect_list(value)" -> "values")
+    val listed = g.pointInTimeJoin(ex, "_prediction_time", lists)
+    keepsComposedPlan(listed, merges = 1)
+    assert(nodesOf[PointInTimePassExec](listed).isEmpty, flagshipPlan(listed))
+  }
+
+  test("a streaming frame keeps the composed plan") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import graft.plans.AsOfJoinNode
+    import graft.streaming.StreamingFlagship.StreamEvent
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val stream = MemoryStream[StreamEvent].toDF()
+    val ev = EventTable(stream, "ts", Some("user_id"))
+    val df = pipeline(ev, ev, inclusive = true)
+    // a streaming frame cannot be planned outside writeStream, so this
+    // checks the logical operators the rule would have replaced
+    val plan = df.queryExecution.analyzed
+    assert(df.isStreaming)
+    assert(plan.collect { case j: AsOfJoinNode => j }.size === 2, plan.treeString)
+    assert(plan.collect { case w: Window => w }.size === 3, plan.treeString)
+    assert(plan.collect { case p: PointInTimePass => p }.isEmpty, plan.treeString)
   }
 
   test("q_range_join plans the user_id equality as the join key (SMJ/SHJ, not NL)") {
@@ -88,16 +185,8 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       Seq((ts("01:00"), "k1", 1L)).toDF("_change_time", "_entity", "v"),
       "_entity", "_change_time", Seq("v"))
     val joined = AsOfJoin.asof(probes, "k", "t", versions)
-    def countShuffles(p: SparkPlan): Int = {
-      val self = p match {
-        case _: ShuffleExchangeExec => 1
-        case a: AdaptiveSparkPlanExec => countShuffles(a.executedPlan)
-        case _ => 0
-      }
-      self + p.children.map(countShuffles).sum
-    }
-    val n = countShuffles(joined.queryExecution.executedPlan)
-    assert(n === 1, joined.queryExecution.executedPlan.toString.take(3000))
+    assert(nodesOf[ShuffleExchangeExec](joined).size === 1,
+      joined.queryExecution.executedPlan.toString.take(3000))
   }
 
   test("IVF cell assignment and OPQ rotation are exchange-free map-side passes") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.Graft
 import graft.core.EventTable
 import graft.ops.Examples
 import graft.sources.Tables
@@ -41,12 +42,20 @@ class SqlInterfaceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("flagship oracle SQL (minus DuckDB-only functions) runs on spark.sql") {
-    EventTable(Tables.events(spark, sfDir), "ts", Some("user_id"))
-      .createOrReplaceTempView("events")
+    val events = EventTable(Tables.events(spark, sfDir), "ts", Some("user_id"))
+    events.createOrReplaceTempView("events")
     // the exact oracle text for q_flagship is ANSI enough for Spark SQL
     val sql = graft.queries.Registry.oracles("q_flagship")
     val viaSql = spark.sql(sql)
-    val viaApi = graft.queries.Events.flagship(spark, sfDir)
+    // the same pipeline through the public API (App.java:47-77, 200-233)
+    val g = Graft(spark)
+    val errCents = g.versionedWhere(events, "event_type = 'error'",
+      "sum(cast(round(value * 100) as bigint))" -> "err_cents")
+    val purchases = g.versionedWhere(events, "event_type = 'purchase'", "count(1)" -> "purchases")
+    val ex = g.examples(events, "count(case when event_type = 'error' then 1 end)",
+      lookback = 1, trigger = "= 2", labelDelay = "INTERVAL 1 HOUR", orderCols = Seq("event_id"))
+    val viaApi = g.pointInTimeJoin(
+      g.pointInTimeJoin(ex, "_prediction_time", errCents), "_label_time", purchases)
     assert(viaSql.collect().map(_.toSeq).toSet === viaApi.collect().map(_.toSeq).toSet)
   }
 }

@@ -49,7 +49,8 @@ class StreamingParitySpec extends AnyFunSuite with SparkSpec {
         if (r.isNullAt(4)) null else r.getLong(4)))
       .toSet
 
-    val exp = graft.queries.Events.flagship(spark, sfDir)
+    // batch: the same pipeline through the public API (q_flagship)
+    val exp = graft.queries.Registry.queries("q_flagship")(spark, sfDir)
       .collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
         if (r.isNullAt(3)) null else r.getLong(3),
