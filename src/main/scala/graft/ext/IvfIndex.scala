@@ -93,6 +93,7 @@ object IvfIndex {
       streamEmb: DataFrame, path: String, compactEvery: Int = 10,
       maxFilesPerCell: Int = 8): Unit = {
     val model = load(path)
+    graft.streaming.LocalFs.ensure(streamEmb.sparkSession)
     val q = streamEmb.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$path/_ingest_checkpoint")

@@ -15,12 +15,18 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * A scratch drain's checkpoint is disposable by construction — the
   * query is created, drained with AvailableNow, and discarded inside
   * one call, and nothing ever resumes from its checkpoint (see
-  * [[StreamingOps]]'s scratch-checkpoint scaladoc). Yet every such
-  * drain still pays real filesystem round-trips through the default
-  * rename-based manager: offset-WAL create+rename+CRC, commit-log
-  * ditto, the file-source seen-files log, and one state-store delta
-  * file per store per batch — measured ~0.08 s of walCommit+
-  * commitOffsets alone per bounded drain at sf0.1, even on /dev/shm.
+  * [[StreamingOps]]'s scratch-checkpoint scaladoc). Yet through the
+  * default rename-based manager every such drain writes real files:
+  * offset-WAL create+rename+CRC, commit-log ditto, the file-source
+  * seen-files log, and one state-store delta file per store per batch.
+  * The ~0.08 s of walCommit+commitOffsets measured per bounded drain at
+  * sf0.1, even on /dev/shm, was not those syscalls: without the native
+  * Hadoop library, Hadoop's local `FileContext` forked a `chmod` for
+  * every file it created and a `readlink` on both paths of every rename.
+  * [[LocalFs]] now answers both in-process, so the durable path no
+  * longer pays them; what this class still saves is the file I/O
+  * itself, which a same-window A/B over the 16 q_stream rows found
+  * within noise (ROADMAP item 4).
   *
   * Scope is decided PER PATH, not per session: paths under a root
   * registered by [[StreamingOps.withScratchCheckpoint]] live in a

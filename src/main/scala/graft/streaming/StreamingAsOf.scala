@@ -116,6 +116,7 @@ object StreamingAsOf {
   /** tagged must be a STREAMING Dataset of AsOfInput with a watermark
     * already applied to its event-time column. */
   def apply(tagged: Dataset[AsOfInput]): Dataset[AsOfAnswer] = {
+    LocalFs.ensure(tagged.sparkSession)
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
     implicit val outEnc: Encoder[AsOfAnswer] = Encoders.product[AsOfAnswer]
     tagged

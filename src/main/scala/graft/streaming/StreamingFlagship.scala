@@ -60,6 +60,14 @@ object StreamingFlagship {
     t
   }
 
+  /** `CAST(round(value * 100) AS BIGINT)` as the batch pipeline computes
+    * it: Spark's `round` is HALF_UP, away from zero for negative values,
+    * where `math.round` alone would round -12.5 up to -12. */
+  private def toCents(value: Double): Long = {
+    val c = value * 100
+    if (c < 0) -math.round(-c) else math.round(c)
+  }
+
   private def purchasesAsOf(s: FlagshipState, tUs: Long): Long =
     s.purchaseBase + s.purchaseTs.count(_ <= tUs)
 
@@ -92,31 +100,37 @@ object StreamingFlagship {
     var s = state.getOption.getOrElse(FlagshipState(false, 0L, 0L, Nil, Nil))
 
     if (!state.hasTimedOut) {
-      val batch = events.toSeq.sortBy(e => (toMicros(e.ts), e.event_id))
-      // phase 1: error-cents deltas of this batch (for same-ts tie handling)
-      val deltas = batch.collect {
-        case e if e.event_type == "error" =>
-          (toMicros(e.ts), math.round(e.value * 100))
-      }
-      val baseCents = s.errCents
-      var newPending = List.empty[PendingExample]
+      val batch = events.toArray.sortBy(e => (toMicros(e.ts), e.event_id))
+      // one running sum over the sorted batch; an example's as-of is
+      // inclusive, so each run of equal timestamps is summed before any
+      // example in it reads the sum (same-ts ties later in event_id order
+      // count)
+      var cents = s.errCents
+      var purchases = s.purchaseTs
+      val newPending = List.newBuilder[PendingExample]
       var lastWasError = s.lastWasError
-      for (e <- batch) {
-        val isError = e.event_type == "error"
-        if (isError && lastWasError) {
-          val predUs = toMicros(e.ts)
-          // inclusive as-of: all error cents with ts <= predUs (incl. ties)
-          val cents = baseCents + deltas.filter(_._1 <= predUs).map(_._2).sum
-          newPending ::= PendingExample(predUs, predUs + LabelDelayUs, cents)
+      var i = 0
+      while (i < batch.length) {
+        val tUs = toMicros(batch(i).ts)
+        var j = i
+        while (j < batch.length && toMicros(batch(j).ts) == tUs) {
+          if (batch(j).event_type == "error") cents += toCents(batch(j).value)
+          j += 1
         }
-        lastWasError = isError
-        if (e.event_type == "purchase")
-          s = s.copy(purchaseTs = toMicros(e.ts) :: s.purchaseTs)
+        while (i < j) {
+          val e = batch(i)
+          val isError = e.event_type == "error"
+          if (isError && lastWasError) newPending += PendingExample(tUs, tUs + LabelDelayUs, cents)
+          lastWasError = isError
+          if (e.event_type == "purchase") purchases = tUs :: purchases
+          i += 1
+        }
       }
       s = s.copy(
         lastWasError = lastWasError,
-        errCents = baseCents + deltas.map(_._2).sum,
-        pending = s.pending ++ newPending.reverse)
+        errCents = cents,
+        purchaseTs = purchases,
+        pending = s.pending ++ newPending.result())
     }
 
     val (next, out) = emitMatured(s, key, wmUs)
@@ -125,7 +139,7 @@ object StreamingFlagship {
       // ceil micros -> ms so the timeout's watermark covers the label time
       state.setTimeoutTimestamp(Math.floorDiv(next.pending.map(_.labelUs).min + 999L, 1000L))
     } else if (next.lastWasError || next.purchaseBase > 0 || next.purchaseTs.nonEmpty ||
-      next.errCents > 0) {
+      next.errCents != 0) {
       state.update(next)
     } else {
       state.remove()
@@ -137,6 +151,7 @@ object StreamingFlagship {
     * Returns an append-mode stream of training examples. */
   def apply(events: DataFrame, watermarkDelay: String = "0 seconds"): Dataset[TrainingExample] = {
     val spark: SparkSession = events.sparkSession
+    LocalFs.ensure(spark)
     import spark.implicits._
     implicit val stateEnc: Encoder[FlagshipState] = Encoders.product[FlagshipState]
     implicit val outEnc: Encoder[TrainingExample] = Encoders.product[TrainingExample]

@@ -97,6 +97,7 @@ object StreamingFunnel {
   def apply(
       events: DataFrame, steps: Seq[String], within: String = "1 HOUR",
       watermarkDelay: String = "0 seconds"): Dataset[Conversion] = {
+    LocalFs.ensure(events.sparkSession)
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
     implicit val evEnc: Encoder[FunnelEvent] = Encoders.product[FunnelEvent]
     implicit val outEnc: Encoder[Conversion] = Encoders.product[Conversion]

@@ -87,6 +87,7 @@ object StreamingNearDup {
   /** docs must be a STREAMING DataFrame with (doc_id: long, text: string). */
   def apply(docs: DataFrame, threshold: Double = 0.7): Dataset[NearDupPair] = {
     val spark = docs.sparkSession
+    LocalFs.ensure(spark)
     import spark.implicits._
     implicit val stateEnc: Encoder[BucketState] = Encoders.product[BucketState]
     implicit val outEnc: Encoder[NearDupPair] = Encoders.product[NearDupPair]

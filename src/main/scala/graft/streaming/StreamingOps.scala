@@ -10,13 +10,20 @@ import org.apache.spark.sql.functions._
   * explicit per-key state of [[StreamingFlagship]]. */
 object StreamingOps {
 
+  /** `events` with its watermark declared; every query builder below
+    * starts here, so the session checkpoints through [[LocalFs]]. */
+  private def watermarked(events: DataFrame, timeCol: String, delay: String): DataFrame = {
+    LocalFs.ensure(events.sparkSession)
+    events.withWatermark(timeCol, delay)
+  }
+
   /** Continuous grouped aggregation (A1/A2 streaming form): the query
     * result is the dynamic table; read it in update/complete output mode.
     * State = one row per key (Spark's streaming-agg state store). */
   def runningAggregate(
       events: DataFrame, timeCol: String, delay: String,
       keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    events.withWatermark(timeCol, delay)
+    watermarked(events, timeCol, delay)
       .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
 
@@ -25,7 +32,7 @@ object StreamingOps {
   def tumbling(
       events: DataFrame, timeCol: String, delay: String, width: String,
       keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    events.withWatermark(timeCol, delay)
+    watermarked(events, timeCol, delay)
       .groupBy((window(col(timeCol), width) +: keys.map(col)): _*)
       .agg(aggs.head, aggs.tail: _*)
 
@@ -33,7 +40,7 @@ object StreamingOps {
   def sessionized(
       events: DataFrame, timeCol: String, delay: String, gap: String,
       keys: Seq[String], aggs: Seq[Column]): DataFrame =
-    events.withWatermark(timeCol, delay)
+    watermarked(events, timeCol, delay)
       .groupBy((session_window(col(timeCol), gap) +: keys.map(col)): _*)
       .agg(aggs.head, aggs.tail: _*)
 
@@ -41,7 +48,7 @@ object StreamingOps {
   def dedupWithinWatermark(
       events: DataFrame, timeCol: String, delay: String,
       keys: Seq[String]): DataFrame =
-    events.withWatermark(timeCol, delay)
+    watermarked(events, timeCol, delay)
       .dropDuplicatesWithinWatermark(keys)
 
   /** Changelog view of a continuous grouped aggregation WITH RETRACTION
@@ -137,7 +144,11 @@ object StreamingOps {
     * stateless foreachBatch drain automatically, but STATEFUL streaming
     * operators bypass AQE and pin one state store per shuffle partition
     * — measured at sf0.1, 32 stores cost a stateful query ~1.1-1.3 s of
-    * pure store init/commit overhead vs 8 (tools/StateOverheadProbe). */
+    * store init/commit overhead vs 8 (tools/StateOverheadProbe). That
+    * cost is per store, not the `chmod`/`readlink` forks [[LocalFs]]
+    * removed: re-measured without them (durable checkpoints on tmpfs,
+    * local[4], 32 shuffle partitions), the six stateful q_stream rows
+    * still took ~1.1 s more each on 32 stores than on 8 (ROADMAP item 4). */
   def boundedStatePartitions(
       spark: org.apache.spark.sql.SparkSession, paths: String*): Int =
     boundedStatePartitions(spark, 32L * 1024 * 1024, paths: _*)
@@ -170,9 +181,12 @@ object StreamingOps {
     * for the drain's duration via [[ScratchCheckpointFileManager]] —
     * the per-batch offset/commit WAL writes, the file-source seen-files
     * log, and every state-store delta commit then cost map puts instead
-    * of filesystem round-trips (the tmpfs placement this replaces was
-    * worth ~0.1-0.3 s per stateful drain at sf0.1; the manager removes
-    * the remaining ~0.08 s/drain of create+rename+CRC syscalls). The
+    * of file writes (the tmpfs placement this replaces was worth
+    * ~0.1-0.3 s per stateful drain at sf0.1). The ~0.08 s/drain the
+    * manager was measured to remove on top of tmpfs was Hadoop forking
+    * `chmod` per created file and `readlink` per rename path, not
+    * create+rename+CRC syscalls; [[LocalFs]] removes those forks from
+    * durable checkpoints too. The
     * checkpoint PATH still points at tmpfs so anything reading it
     * outside the manager sees an empty dir, not garbage. Deployed
     * continuous queries must keep durable shared-storage checkpoints
@@ -181,6 +195,7 @@ object StreamingOps {
   private def withScratchCheckpoint[T](
       spark: org.apache.spark.sql.SparkSession, name: String)(
       body: String => T): T = {
+    LocalFs.ensure(spark)
     val base =
       if (new java.io.File("/dev/shm").isDirectory)
         java.nio.file.Paths.get("/dev/shm")
@@ -311,6 +326,7 @@ object StreamingOps {
       statePartitions: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.{Dataset, Row}
     val spark = df.sparkSession
+    LocalFs.ensure(spark)
     // captured from the first transformed batch; the zero-batch fallback
     // is the only path that ever APPLIES transform to an empty frame
     val seenSchema = new java.util.concurrent.atomic.AtomicReference[

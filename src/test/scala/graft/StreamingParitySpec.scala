@@ -61,6 +61,84 @@ class StreamingParitySpec extends AnyFunSuite with SparkSpec {
     assert(got === exp)
   }
 
+  /** The flagship pipeline through the public API (q_flagship's body)
+    * on in-memory events. */
+  private def batchFlagship(events: Seq[StreamEvent]) = {
+    import spark.implicits._
+    val g = graft.api.Graft(spark)
+    val ev = graft.core.EventTable(events.toDF(), "ts", Some("user_id"))
+    val errCents = g.versionedWhere(ev, "event_type = 'error'",
+      "sum(cast(round(value * 100) as bigint))" -> "err_cents")
+    val purchases = g.versionedWhere(ev, "event_type = 'purchase'", "count(1)" -> "purchases")
+    val ex = g.examples(ev,
+      windowAgg = "count(case when event_type = 'error' then 1 end)",
+      lookback = 1, trigger = "= 2", labelDelay = "INTERVAL 1 HOUR",
+      orderCols = Seq("event_id"))
+    g.pointInTimeJoin(g.pointInTimeJoin(ex, "_prediction_time", errCents), "_label_time", purchases)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)),
+        if (r.isNullAt(4)) None else Some(r.getLong(4))))
+      .sortBy(r => (r._1, r._2.getTime, r._3.getTime, r._4, r._5))
+
+  /** StreamingFlagship fed `batches` one micro-batch each, then a
+    * sentinel that matures every label, against the batch pipeline on
+    * the same events; duplicates count. */
+  private def assertStreamMatchesBatch(name: String, batches: Seq[Seq[StreamEvent]]): Unit = {
+    import spark.implicits._
+    val all = batches.flatten
+    val input = MemoryStream[StreamEvent]
+    val query = StreamingFlagship(input.toDF())
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try {
+      batches.foreach { c => input.addData(c); query.processAllAvailable() }
+      input.addData(Seq(StreamEvent(-1L,
+        new java.sql.Timestamp(all.map(_.ts.getTime).max + 10L * 3600 * 1000), -999L, "view", 0.0)))
+      query.processAllAvailable()
+    } finally query.stop()
+    val got = rows(spark.table(name).where(col("_entity") =!= -999L))
+    val exp = rows(batchFlagship(all))
+    assert(exp.nonEmpty)
+    assert(got === exp)
+  }
+
+  private def ev(id: Long, hhmm: String, user: Long, tpe: String, value: Double) =
+    StreamEvent(id, ts(hhmm), user, tpe, value)
+
+  test("streaming flagship keeps negative error sums across batches and rounds half-cents as batch does") {
+    assertStreamMatchesBatch("flagship_negative", Seq(
+      // user 1 ends the batch with a negative sum, no purchase, no pending
+      // example and a non-error last event: its sum must survive the batch
+      Seq(ev(1, "00:00", 1, "error", -3.0), ev(2, "00:05", 1, "view", 0.0),
+        // user 2: half-cent negatives round away from zero (-12.5 -> -13)
+        ev(3, "00:06", 2, "error", -0.125), ev(4, "00:07", 2, "error", -0.125),
+        ev(5, "00:08", 3, "error", 2.5), ev(6, "00:09", 3, "error", -4.75)),
+      Seq(ev(7, "01:00", 1, "error", -1.0), ev(8, "01:05", 1, "error", -2.0),
+        ev(9, "01:06", 2, "view", 0.0), ev(10, "01:07", 3, "purchase", 0.0)),
+      // user 1 again after its state went through a timeout
+      Seq(ev(11, "03:00", 1, "error", 0.5), ev(12, "03:05", 1, "error", 0.01),
+        ev(13, "03:06", 2, "error", 0.125), ev(14, "03:07", 2, "error", 0.0))))
+  }
+
+  test("streaming flagship counts same-timestamp ties inclusively, as the batch pipeline does") {
+    assertStreamMatchesBatch("flagship_ties", Seq(
+      // three errors at one instant: two examples, both see all three
+      Seq(ev(1, "00:00", 1, "error", 1.0), ev(2, "00:00", 1, "error", 2.0),
+        ev(3, "00:00", 1, "error", 4.0),
+        // a view tied before an error: no streak; the later tie fires
+        ev(4, "00:10", 2, "error", 1.0), ev(5, "00:20", 2, "view", 0.0),
+        ev(6, "00:20", 2, "error", 8.0), ev(7, "00:20", 2, "error", 16.0),
+        // a purchase exactly at the label time counts
+        ev(8, "00:30", 3, "error", 1.0), ev(9, "00:40", 3, "error", 1.0),
+        ev(10, "00:50", 1, "purchase", 0.0)),
+      Seq(ev(11, "01:00", 1, "purchase", 0.0), ev(12, "01:40", 3, "purchase", 0.0),
+        ev(13, "01:40", 3, "error", 32.0), ev(14, "01:40", 3, "error", 64.0))))
+  }
+
   test("streaming tumbling window equals batch windowed aggregation") {
     import spark.implicits._
     val events = loadEvents()
