@@ -325,7 +325,12 @@ object Dedup {
     * guard) — it broadcasts, so the sets frame never shuffles. `sh` must
     * be distinct (doc_id, shingle) rows, as [[docShingles]] emits; the
     * intersection size is then exactly the old join's match count and
-    * the emitted double is bit-identical. */
+    * the emitted double is bit-identical.
+    *
+    * Every candidate pair whose two docs both have shingles yields
+    * exactly one row, so a pair that shares NO shingle comes back with
+    * `jaccard = 0.0`; a pair with a doc absent from `sh` yields none.
+    * Callers that want near-duplicates filter on `jaccard`. */
   def jaccardFor(pairs: DataFrame, sh: DataFrame): DataFrame = {
     val sets = sh.groupBy("doc_id")
       .agg(collect_list(col("shingle")).as("hs"), count(lit(1)).as("n_sh"))

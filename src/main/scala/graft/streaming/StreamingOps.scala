@@ -177,20 +177,14 @@ object StreamingOps {
   /** Scratch checkpoint root for BOUNDED drains whose result is handed
     * back in-session: nothing ever resumes from such a checkpoint (the
     * query is created, drained with AvailableNow, and discarded inside
-    * one call), so it is disposable by construction and lives IN-HEAP
-    * for the drain's duration via [[ScratchCheckpointFileManager]] —
-    * the per-batch offset/commit WAL writes, the file-source seen-files
-    * log, and every state-store delta commit then cost map puts instead
-    * of file writes (the tmpfs placement this replaces was worth
-    * ~0.1-0.3 s per stateful drain at sf0.1). The ~0.08 s/drain the
-    * manager was measured to remove on top of tmpfs was Hadoop forking
-    * `chmod` per created file and `readlink` per rename path, not
-    * create+rename+CRC syscalls; [[LocalFs]] removes those forks from
-    * durable checkpoints too. The
-    * checkpoint PATH still points at tmpfs so anything reading it
-    * outside the manager sees an empty dir, not garbage. Deployed
-    * continuous queries must keep durable shared-storage checkpoints
-    * and the default manager — the sinkDir mode and
+    * one call), so it is disposable by construction and is deleted when
+    * the drain returns. It lives on tmpfs (/dev/shm, else the JVM temp
+    * dir): the per-batch offset/commit logs, the file-source seen-files
+    * log and every state-store delta are written through Spark's
+    * default checkpoint manager over [[LocalFs]], and on a RAM-backed
+    * filesystem those create+rename commits cost no disk round-trip.
+    * Deployed continuous queries must keep durable shared-storage
+    * checkpoints — the sinkDir mode and
     * [[graft.ext.IvfIndex.appendOnIngest]] deliberately do. */
   private def withScratchCheckpoint[T](
       spark: org.apache.spark.sql.SparkSession, name: String)(
@@ -203,29 +197,8 @@ object StreamingOps {
     reapStaleScratch(base)
     val dir = java.nio.file.Files
       .createTempDirectory(base, s"graft_ckpt_$name")
-    // install the path-scoped manager ONCE and leave it: it delegates
-    // every non-claimed path to the default manager, so the install is
-    // idempotent and needs no restore — a set/restore pair here raced
-    // with overlapping drains (B snapshots A's in-flight value and
-    // "restores" it after A unsets) and with durable-checkpoint queries
-    // started mid-drain, which would have inherited a session-wide
-    // in-heap manager. Only the CLAIMED root routes in-heap.
-    val scratchCls = classOf[ScratchCheckpointFileManager].getName
-    spark.conf.getOption(ScratchCheckpointFileManager.ConfKey) match {
-      case Some(`scratchCls`) => // already installed
-      case prior =>
-        // a pre-existing CUSTOM manager keeps governing durable
-        // checkpoints: stash it for the delegate to chain to
-        prior.filter(_.nonEmpty).foreach(
-          spark.conf.set(ScratchCheckpointFileManager.DelegateKey, _))
-        spark.conf.set(ScratchCheckpointFileManager.ConfKey, scratchCls)
-    }
-    ScratchCheckpointFileManager.claim(dir.toString)
     try body(dir.toString)
-    finally {
-      ScratchCheckpointFileManager.release(dir.toString)
-      deleteRecursively(dir)
-    }
+    finally deleteRecursively(dir)
   }
 
   /** Recursive delete with the Files.walk stream CLOSED (an unclosed
@@ -245,9 +218,10 @@ object StreamingOps {
     * not disk — every scratch-checkpoint entry sweeps trees whose
     * NEWEST entry (deep max mtime, not the root's — a write into a
     * nested offsets/ dir never touches the root's own mtime) is over an
-    * hour old. With the in-heap manager these trees are empty dirs;
-    * the deep check matters for leftovers from older on-disk-layout
-    * binaries sharing the base. */
+    * hour old. A crashed drain leaves its whole checkpoint behind —
+    * offset and commit logs, state-store deltas and snapshots — so
+    * without this sweep every hard crash would hold that RAM until
+    * reboot. */
   private def reapStaleScratch(base: java.nio.file.Path): Unit =
     try {
       val cutoff = System.currentTimeMillis() - 60L * 60 * 1000

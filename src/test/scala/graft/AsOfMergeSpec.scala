@@ -260,9 +260,7 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     // AQE collapses codegen stages per-stage at runtime; turn it off so the
     // static plan exposes the stage assignment
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val p = Seq((ts("02:00"), 1L), (ts("04:00"), 2L)).toDF("t", "k")
       val vdf = Seq((ts("01:00"), 1L, 10L), (ts("03:00"), 2L, 20L))
         .toDF("_change_time", "_entity", "v")
@@ -280,6 +278,6 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
       assert(planS.linesIterator.exists(l =>
         l.contains("AsOfMergeJoin") && !l.contains("*(")),
         s"string-keyed merge join must fall back to interpreted:\n$planS")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 }

@@ -32,6 +32,17 @@ class ExtOpsSpec extends AnyFunSuite with SparkSpec {
     assert(randomDists.sum.toDouble / randomDists.length > 20.0)
   }
 
+  test("jaccardFor: one row per candidate pair, 0.0 for a pair with no shared shingle") {
+    import spark.implicits._
+    val sh = Seq(1L -> "a b c", 1L -> "b c d", 2L -> "a b c", 2L -> "c d e", 3L -> "x y z")
+      .toDF("doc_id", "shingle")
+    // doc 4 has no shingles: its pair drops out
+    val pairs = Seq(1L -> 2L, 1L -> 3L, 1L -> 4L).toDF("doc_a", "doc_b")
+    val got = Dedup.jaccardFor(pairs, sh).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).sortBy(_._1)
+    assert(got.toSeq === Seq((1L, 2L) -> 1.0 / 3, (1L, 3L) -> 0.0))
+  }
+
   test("simhashRecallGate: rows are the exact near-dup pairs; boolean flips when unreachable") {
     val docs = Tables.load(spark, sfDir, "documents")
     val exact = Dedup.jaccardNearDup(docs, 0.7)

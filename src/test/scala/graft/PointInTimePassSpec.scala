@@ -108,15 +108,13 @@ class PointInTimePassSpec extends AnyFunSuite with SparkSpec {
   test("a key whose rows spill past the in-memory buffer gives the same answer") {
     // buffers switch to the spillable sorter after 1 row and spill after 2,
     // so every cursor reads rows the iterator reuses
-    val confs = Seq("spark.sql.windowExec.buffer.in.memory.threshold" -> "1",
-      "spark.sql.windowExec.buffer.spill.threshold" -> "2")
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf("spark.sql.windowExec.buffer.in.memory.threshold" -> "1",
+        "spark.sql.windowExec.buffer.spill.threshold" -> "2") {
       val df = toDf(sample(evGen(80, 25, hot = true), 21L))
       val got = pipeline(df, 3, 5, fused)
       assert(rows(got) === rows(pipeline(df, 3, 5, reference)))
       assert(nodesOf[PointInTimePassExec](got).head.metrics("spillSize").value > 0)
-    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
   }
 
   test("count and sum over an empty prefix are NULL, not 0") {

@@ -19,6 +19,20 @@ trait SparkSpec { self: AnyFunSuite =>
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Runs `body` with the given session confs set, then puts each key back
+    * as it was: its prior value, or unset if it had none. The session is
+    * shared by every suite in the JVM, so a pin left behind would change
+    * what later suites run under. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def ts(hhmm: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s"2021-08-21 $hhmm:00")
 

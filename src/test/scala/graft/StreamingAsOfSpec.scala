@@ -17,6 +17,13 @@ class StreamingAsOfSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
+  /** transformWithState needs the RocksDB state store (multiple column
+    * families); the default HDFS-backed provider rejects it. The provider
+    * is read when a query starts, where its session is cloned. */
+  private def withRocksDb[T](body: => T): T =
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
   test("streaming as-of answers equal batch AsOfJoin on sf0.001 features") {
     import spark.implicits._
     val events = EventTable(Tables.events(spark, sfDir), "ts", Some("user_id"))
@@ -49,15 +56,11 @@ class StreamingAsOfSpec extends AnyFunSuite with SparkSpec {
     val maxTs = all.map(_.ts.getTime).max
     val sentinel = AsOfInput(-999L, new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), 0, 0L, -1L)
 
-    // transformWithState needs the RocksDB state store (multiple column
-    // families); the default HDFS-backed provider rejects it
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[AsOfInput]
     val out = StreamingAsOf(
       input.toDF().withWatermark("ts", "0 seconds").as[AsOfInput])
-    val query = out.writeStream.format("memory").queryName("asof_out")
-      .outputMode("append").start()
+    val query = withRocksDb(out.writeStream.format("memory").queryName("asof_out")
+      .outputMode("append").start())
     try {
       chunks.foreach { c => input.addData(c); query.processAllAvailable() }
       input.addData(Seq(sentinel)); query.processAllAvailable()
@@ -86,13 +89,11 @@ class StreamingAsOfSpec extends AnyFunSuite with SparkSpec {
     // before reaching the processor (verified here by construction: every
     // row stays inside the 60' allowed lateness when its batch runs).
     def t(min: Int) = new java.sql.Timestamp(1704067200000L + min * 60000L)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[AsOfInput]
     val out = StreamingAsOf(
       input.toDF().withWatermark("ts", "60 minutes").as[AsOfInput])
-    val query = out.writeStream.format("memory").queryName("asof_prune")
-      .outputMode("append").start()
+    val query = withRocksDb(out.writeStream.format("memory").queryName("asof_prune")
+      .outputMode("append").start())
     try {
       // batch 1: first version (ts=10', v=100)
       input.addData(Seq(AsOfInput(1L, t(10), 0, 100L, -1L)))

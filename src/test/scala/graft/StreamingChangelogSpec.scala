@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.StreamingOps
+import graft.streaming.{LocalFs, StreamingOps}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,5 +87,27 @@ class StreamingChangelogSpec extends AnyFunSuite with SparkSpec {
       Seq(sum(col("value")).as("total")))
     assert(cl.columns.toSeq === Seq("op", "batch_id", "user_id", "total"))
     assert(cl.count() === 0)
+  }
+
+  test("a drain leaves the session's conf as it found it") {
+    val (dir, schema) = buildStreamDir()
+    def stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val total = Seq(sum(col("value")).as("total"))
+    // the LocalFs binding is the one setting a drain keeps in its session
+    LocalFs.ensure(spark)
+    val before = spark.conf.getAll
+    assert(StreamingOps.changelog(stream, "ts", "1000 hours", Seq("user_id"), total)
+      .count() > 0)
+    assert(StreamingOps.runToParquet(
+      StreamingOps.tumbling(stream, "ts", "0 seconds", "1 hour", Seq("user_id"), total),
+      "spec_side_effects", statePartitions = Some(3)).count() > 0)
+    // every conf, the shuffle partitions runToParquet pinned included
+    assert(spark.conf.getAll === before)
+    // a durable query started after the drains checkpoints through
+    // Spark's default manager
+    val m = CheckpointFileManager.create(
+      new org.apache.hadoop.fs.Path(dir), spark.sessionState.newHadoopConf())
+    assert(m.isInstanceOf[FileContextBasedCheckpointFileManager], m.getClass.getName)
   }
 }

@@ -5,9 +5,12 @@ import java.nio.file.{Files, Path => JPath}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.StreamingFlagship
+import graft.streaming.{StreamingFlagship, StreamingOps}
 import graft.streaming.StreamingFlagship.{StreamEvent, TrainingExample}
+import jdk.jfr.Recording
+import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,12 +18,17 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A `StreamingFlagship` query's durable `file:` checkpoint: commits
   * start no process, and a query stopped between micro-batches resumes
   * from its checkpoint, whichever `file:` binding wrote it, with the
-  * examples of an uninterrupted run. */
+  * examples of an uninterrupted run. A bounded `StreamingOps` drain's
+  * scratch checkpoint commits start no process either. */
 class StreamingCheckpointSpec extends AnyFunSuite with SparkSpec
     with org.scalatest.BeforeAndAfterAll {
 
   private val HadoopLocalFs = "org.apache.hadoop.fs.local.LocalFs"
   private val BindingKey = "fs.AbstractFileSystem.file.impl"
+  private val HdfsStateStore =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+  private val EventSchema =
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"
 
   private type Row5 = (Long, Long, Long, Option[Long], Option[Long])
   private def row(e: TrainingExample): Row5 =
@@ -77,7 +85,7 @@ class StreamingCheckpointSpec extends AnyFunSuite with SparkSpec
     val sink: (Dataset[TrainingExample], Long) => Unit =
       (ds, _) => got.synchronized { got ++= ds.collect().map(row) }
     val stream = session.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
+      .schema(EventSchema)
       .option("maxFilesPerTrigger", 1)
       .json(src.toString)
     val q = StreamingFlagship(stream).writeStream
@@ -135,46 +143,83 @@ class StreamingCheckpointSpec extends AnyFunSuite with SparkSpec
     assert((a ++ b).sorted === full)
   }
 
+  /** `body`'s result and the JFR events recorded while it ran: every
+    * process start, with its stack, and every file write. */
+  private def recording[T](body: => T): (T, Seq[RecordedEvent]) = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.enable("jdk.FileWrite").withoutThreshold()
+    rec.start()
+    val out = try body finally rec.stop()
+    val dump = Files.createTempFile("graft_forks", ".jfr")
+    try {
+      rec.dump(dump)
+      (out, RecordingFile.readAllEvents(dump).asScala.toSeq)
+    } finally {
+      rec.close()
+      Files.deleteIfExists(dump)
+    }
+  }
+
+  /** No process start among `events`, leaving out two threads that are
+    * not the query's commit path: the JDK's shared Cleaner thread deletes
+    * the artifact directories of dropped sessions (`rm -rf`), and Spark's
+    * driver and executor heartbeaters each ask `getconf PAGESIZE` once for
+    * their process-tree metrics. */
+  private def assertNoStarts(events: Seq[RecordedEvent]): Unit = {
+    val starts = events.filter(_.getEventType.getName == "jdk.ProcessStart")
+      .filterNot(e => Option(e.getThread("eventThread")).map(_.getJavaName)
+        .exists(t => t.startsWith("Cleaner") || t.endsWith("-heartbeater")))
+    assert(starts.isEmpty,
+      s"${starts.size} process starts, first: ${starts.headOption.map(_.getString("command")).orNull}")
+  }
+
   test("micro-batch commits on a file: checkpoint start no process") {
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.RecordingFile
     val ckpt = tmp("graft_ckpt_forks")
     val input = MemoryStream[StreamEvent](spark, 4)(
       org.apache.spark.sql.Encoders.product[StreamEvent])
     val sink: (Dataset[TrainingExample], Long) => Unit = (ds, _) => { ds.collect(); () }
-    // the default (HDFS-backed) state store, whatever an earlier suite
-    // left in the shared session: its delta and checksum files are the
-    // commits under test
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
-    val q = try StreamingFlagship(input.toDF()).writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(sink)
-      .start()
-    finally prior.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
-    try {
-      events.grouped(400).foreach { c => input.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    rec.stop()
-    val dump = Files.createTempFile("graft_forks", ".jfr")
-    rec.dump(dump)
-    rec.close()
-    // the JDK's shared Cleaner thread deletes the artifact directories of
-    // sessions that earlier tests dropped (`rm -rf`); it is not the query
-    val starts = RecordingFile.readAllEvents(dump).asScala
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
-      .filterNot(e => Option(e.getThread("eventThread")).exists(_.getJavaName.startsWith("Cleaner")))
-    Files.deleteIfExists(dump)
+    val (q, jfr) = recording {
+      // the default (HDFS-backed) state store, whatever an earlier suite
+      // left in the shared session: its delta and checksum files are the
+      // commits under test
+      val q = withConf("spark.sql.streaming.stateStore.providerClass" -> HdfsStateStore) {
+        StreamingFlagship(input.toDF()).writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .foreachBatch(sink)
+          .start()
+      }
+      try {
+        events.grouped(400).foreach { c => input.addData(c); q.processAllAvailable() }
+      } finally q.stop()
+      q
+    }
     val batches = q.recentProgress.count(_.numInputRows > 0)
     assert(batches >= 3, s"$batches micro-batches with data")
     // the stores committed delta files through the checkpoint
     assert(Files.walk(ckpt.resolve("state")).iterator().asScala.exists(_.toString.endsWith(".delta")))
-    assert(starts.isEmpty,
-      s"${starts.size} process starts, first: ${starts.headOption.map(_.getString("command")).orNull}")
+    assertNoStarts(jfr)
+  }
+
+  test("a bounded drain's scratch checkpoint commits start no process") {
+    val src = tmp("graft_ckpt_src")
+    writeChunks(src, chunks)
+    // a fresh session: the LocalFs binding is not yet set in it, and its
+    // state store is the default HDFS-backed one
+    val session = spark.newSession()
+    val stream = session.readStream.schema(EventSchema)
+      .option("maxFilesPerTrigger", 1).json(src.toString)
+    val (log, jfr) = recording {
+      StreamingOps.changelog(stream, "ts", "1 hour", Seq("user_id"),
+        Seq(sum(col("value")).as("total")), statePartitions = Some(2)).collect()
+    }
+    assert(log.map(_.getLong(1)).distinct.length >= 3)
+    // the drain wrote real state-store deltas under its scratch root
+    // (each through a temp file renamed into place)
+    val writes = jfr.filter(_.getEventType.getName == "jdk.FileWrite")
+      .map(_.getString("path")).filter(_ != null)
+    assert(writes.exists(p => p.contains("graft_ckpt_changelog") && p.contains(".delta")),
+      s"${writes.size} file writes, none a scratch state-store delta")
+    assertNoStarts(jfr)
   }
 }

@@ -37,8 +37,6 @@ class StreamingFunnelSpec extends AnyFunSuite with SparkSpec {
       // noise the step filter must drop
       Ev(1L, ts(40), 16L, "error"), Ev(4L, ts(61), 17L, "signup"))
 
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // shuffle into 3 chunks: out-of-order WITHIN the 3h allowed lateness
     val shuffled = new scala.util.Random(11).shuffle(events)
     val chunks = shuffled.grouped(6).toSeq
@@ -48,8 +46,16 @@ class StreamingFunnelSpec extends AnyFunSuite with SparkSpec {
     val out = StreamingFunnel(
       input.toDF(), Seq("view", "click", "purchase"),
       within = "1 HOUR", watermarkDelay = "180 minutes")
-    val query = out.writeStream.format("memory").queryName("funnel_out")
-      .outputMode("append").start()
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val prior = spark.conf.getOption(provider)
+    // read when the query starts (its session is cloned there)
+    val query = withConf(provider ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      out.writeStream.format("memory").queryName("funnel_out")
+        .outputMode("append").start()
+    }
+    // the shared session's provider is back to what later suites expect
+    assert(spark.conf.getOption(provider) === prior)
     try {
       chunks.foreach { c => input.addData(c); query.processAllAvailable() }
       input.addData(Seq(sentinel)); query.processAllAvailable()
