@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -7,9 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, Filter, LogicalPlan, Project, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{ExternalAppendOnlyUnsafeRowArray, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{ExternalAppendOnlyUnsafeRowArray, SortPrefixUtils, SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{CalendarIntervalType, DayTimeIntervalType, IntegerType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{CalendarIntervalType, DataType, DateType, DayTimeIntervalType, DoubleType, IntegerType, LongType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.CalendarInterval
 
 /** The composed point-in-time pipeline as ONE sorted pass per key.
@@ -23,13 +25,18 @@ import org.apache.spark.unsafe.types.CalendarInterval
   * scan, exchange and sort each. When every table derives from one keyed
   * source, all of it is a function of that key's rows in time order, so
   * [[PointInTimeRule]] replaces the chain with this node: one exchange on
-  * the key, one sort on (key, time, ties), one walk per key.
+  * the key, one sort on the key alone, one walk per key.
   *
-  * The walk buffers one key's rows (spilling the way `WindowExec` buffers
-  * a partition group). One cursor evaluates the example trigger over the
-  * trailing ROWS frame; for each feature table a second cursor folds the
-  * rows its `where` admits into a running aggregate buffer, advancing to
-  * the example's own time plus the feature's constant offset (inclusive).
+  * The walk buffers one key's rows and puts them in (time, ties) order
+  * itself: a key's rows usually arrive in order, and sorting on the key
+  * alone lets that sort use a radix sort on the key instead of comparing
+  * (key, time, ties) row by row. A group is buffered, spilling the way
+  * `WindowExec` buffers a partition group, and only a group that arrives
+  * out of order goes through an external sorter. One cursor evaluates the
+  * example trigger over the trailing ROWS frame; for each feature table
+  * a second cursor folds the rows its `where` admits into a running
+  * aggregate buffer, advancing to the example's own time plus the
+  * feature's constant offset (inclusive).
   * A feature reads NULL until a qualifying row with a time lies at or
   * before that instant — exactly the LEFT as-of join over the versioned
   * table, where no version row means NULL (so `count` over nothing is
@@ -345,11 +352,15 @@ object PointInTimeRule extends Rule[LogicalPlan] {
     } else None
 }
 
-/** Physical [[PointInTimePass]]: hash-clustered on the key and sorted on
-  * (key, time, ties) by EnsureRequirements, then one walk per key group.
+/** Physical [[PointInTimePass]]: hash-clustered and sorted on the key
+  * alone by EnsureRequirements, then one walk per key group. The walk
+  * reads each group into a [[PointInTimePassExec.KeyGroup]], which puts
+  * the group's rows in (time NULLS FIRST, ties) order when they do not
+  * arrive so.
   *
   * Metrics: input rows, examples emitted, feature lookups that found no
-  * value, the peak number of rows buffered for one key, and spill size. */
+  * value, the peak number of rows buffered for one key, spill size, the
+  * key groups the walk had to reorder and the time it spent doing so. */
 case class PointInTimePassExec(
     key: Attribute,
     time: Attribute,
@@ -372,7 +383,7 @@ case class PointInTimePassExec(
     ClusteredDistribution(Seq(key)) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(SortOrder(key, Ascending) +: SortOrder(time, Ascending) +: ties)
+    Seq(Seq(SortOrder(key, Ascending)))
 
   override def outputPartitioning: Partitioning =
     UnknownPartitioning(child.outputPartitioning.numPartitions)
@@ -383,7 +394,9 @@ case class PointInTimePassExec(
     "numMissedLookups" -> SQLMetrics.createMetric(sparkContext, "feature lookups with no value"),
     "peakKeyRows" -> org.apache.spark.sql.GraftSqlBridge.maxMetric(
       sparkContext, "peak rows buffered for one key"),
-    "spillSize" -> SQLMetrics.createSizeMetric(sparkContext, "spill size"))
+    "spillSize" -> SQLMetrics.createSizeMetric(sparkContext, "spill size"),
+    "numReorderedGroups" -> SQLMetrics.createMetric(sparkContext, "key groups reordered in the walk"),
+    "reorderTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "walk reorder time"))
 
   override protected def withNewChildInternal(newChild: SparkPlan): PointInTimePassExec =
     copy(child = newChild)
@@ -392,6 +405,8 @@ case class PointInTimePassExec(
     import PointInTimePassExec._
     val in = child.output
     val keyE = key
+    val timeE = time
+    val tiesE = ties
     val tIdx = in.indexWhere(_.exprId == time.exprId)
     val frame = lookback + 1
     val conditionE = condition
@@ -402,11 +417,14 @@ case class PointInTimePassExec(
     val inMemory = conf.windowExecBufferInMemoryThreshold
     val spillRows = conf.windowExecBufferSpillThreshold
     val spillBytes = conf.windowExecBufferSpillSizeThreshold
+    val radix = conf.enableRadixSort
     val numIn = longMetric("numInputRows")
     val numOut = longMetric("numOutputRows")
     val numMissed = longMetric("numMissedLookups")
     val peakRows = longMetric("peakKeyRows")
     val spill = longMetric("spillSize")
+    val reordered = longMetric("numReorderedGroups")
+    val reorderTime = longMetric("reorderTime")
 
     child.execute().mapPartitionsWithIndex { (part, input) =>
       val keyProj = UnsafeProjection.create(Seq(keyE), in)
@@ -417,7 +435,7 @@ case class PointInTimePassExec(
       val frameAggs = new Aggs(conditionE +: examplesE, in)
       val cond = Predicate.create(frameAggs.bind(conditionE), in ++ frameAggs.results)
       cond.initialize(part)
-      val extra = new GenericInternalRow(frameAggs.results.size + valueOut.size)
+      val extra = new SpecificInternalRow((frameAggs.results ++ valueOut).map(_.dataType))
       val outProj = UnsafeProjection.create(
         examplesE.map(frameAggs.bind) ++ valueOut, in ++ frameAggs.results ++ valueOut)
       outProj.initialize(part)
@@ -426,7 +444,8 @@ case class PointInTimePassExec(
         new Cursor(where, offset, fValues, in, tIdx, part)
       }.toArray
 
-      val buffer = new ExternalAppendOnlyUnsafeRowArray(inMemory, spillBytes, spillRows, spillBytes)
+      val group = new KeyGroup(in, timeE, tiesE, inMemory, spillRows, spillBytes, radix,
+        spill, reordered, reorderTime)
       val ring = new Array[UnsafeRow](frame)
 
       new Iterator[InternalRow] {
@@ -453,18 +472,18 @@ case class PointInTimePassExec(
 
         private def fetchNextGroup(): Unit = {
           val currentGroup = nextGroup.copy()
-          spill += buffer.spillSize
-          buffer.clear()
+          group.clear()
           while (nextRowAvailable && nextGroup == currentGroup) {
-            buffer.add(nextRow)
+            group.add(nextRow)
             fetchNextRow()
           }
-          numIn += buffer.length
-          if (buffer.length > peak) peak = buffer.length
+          group.finish()
+          numIn += group.length
+          if (group.length > peak) peak = group.length
           keyNull = currentGroup.isNullAt(0)
-          rows = buffer.generateIterator()
+          rows = group.rows()
           seen = 0
-          if (!keyNull) cursors.foreach(_.reset(buffer.generateIterator()))
+          if (!keyNull) cursors.foreach(_.reset(group.rows()))
         }
 
         /** Walk one row: slide the frame, evaluate the trigger, and on a
@@ -498,8 +517,7 @@ case class PointInTimePassExec(
             if (rows.hasNext) step(rows.next())
             else if (nextRowAvailable) fetchNextGroup()
             else {
-              spill += buffer.spillSize
-              buffer.clear()
+              group.clear()
               if (peak > peakRows.value) peakRows.set(peak)
               return false
             }
@@ -520,6 +538,97 @@ case class PointInTimePassExec(
 
 object PointInTimePassExec {
 
+  /** One key's rows, put in (time NULLS FIRST, ties) order. Rows are
+    * held in the spillable `ExternalAppendOnlyUnsafeRowArray` (thresholds
+    * are the `windowExec` buffer's), and each added row is compared with
+    * the one before it, so a group that arrives in order is never sorted.
+    * `finish` runs an out-of-order group through an `UnsafeExternalRowSorter`
+    * on (time, ties) and refills the buffer with its output. The sorter's
+    * prefix is the time, so it radix-sorts (when `radix` allows) if there
+    * are no ties, and it spills: a key of any size never has to fit in heap.
+    *
+    * `clear` starts a group, `add` takes each row in arrival order,
+    * `finish` orders the group; `rows` then gives any number of passes.
+    * It reports bytes spilled to `spill`, and each group it had to order to
+    * `reordered` and the nanoseconds spent doing so to `reorderTime`. */
+  final class KeyGroup(in: Seq[Attribute], time: Attribute, ties: Seq[SortOrder],
+      inMemory: Int, spillRows: Int, spillBytes: Long, radix: Boolean,
+      spill: SQLMetric, reordered: SQLMetric, reorderTime: SQLMetric) {
+    private val tIdx = in.indexWhere(_.exprId == time.exprId)
+    private val tieOrder = if (ties.isEmpty) null else RowOrdering.create(ties, in)
+    private val buffer = new ExternalAppendOnlyUnsafeRowArray(
+      inMemory, spillBytes, spillRows, spillBytes)
+    private var last: UnsafeRow = _ // copy of the previous row
+    private var inOrder = true
+
+    def length: Int = buffer.length
+
+    def clear(): Unit = {
+      spill += buffer.spillSize
+      buffer.clear()
+      inOrder = true
+    }
+
+    def add(row: UnsafeRow): Unit = {
+      if (buffer.isEmpty) { if (last == null) last = row.copy() else last.copyFrom(row) }
+      else if (inOrder) {
+        if (after(last, row)) inOrder = false else last.copyFrom(row)
+      }
+      buffer.add(row)
+    }
+
+    /** `a` sorts after `b`: time NULLS FIRST, then the ties. */
+    private def after(a: UnsafeRow, b: UnsafeRow): Boolean = {
+      val c =
+        if (a.isNullAt(tIdx)) { if (b.isNullAt(tIdx)) 0 else -1 }
+        else if (b.isNullAt(tIdx)) 1
+        else java.lang.Long.compare(a.getLong(tIdx), b.getLong(tIdx))
+      c > 0 || (c == 0 && tieOrder != null && tieOrder.compare(a, b) > 0)
+    }
+
+    /** Put the group in order, unless it arrived so. */
+    def finish(): Unit = if (!inOrder) {
+      val t0 = System.nanoTime()
+      val task = TaskContext.get().taskMetrics()
+      val spilled0 = task.memoryBytesSpilled - buffer.spillSize
+      val sorter = newSorter()
+      val it = buffer.generateIterator()
+      while (it.hasNext) sorter.insertRow(it.next())
+      val bufferSpilled = buffer.spillSize
+      clear()
+      val sorted = sorter.sort()
+      while (sorted.hasNext) buffer.add(sorted.next().asInstanceOf[UnsafeRow])
+      // the sorter's own spill: the task's since `spilled0`, less the buffer's
+      spill += task.memoryBytesSpilled - spilled0 - bufferSpilled - buffer.spillSize
+      reordered += 1
+      reorderTime += System.nanoTime() - t0
+    }
+
+    /** A fresh pass over the group's rows, in order. */
+    def rows(): Iterator[UnsafeRow] = buffer.generateIterator()
+
+    private lazy val sortOn = BindReferences.bindReference(SortOrder(time, Ascending), in)
+    private lazy val rowOrdering = RowOrdering.create(SortOrder(time, Ascending) +: ties, in)
+    private lazy val schema = DataTypeUtils.fromAttributes(in)
+
+    private def newSorter(): UnsafeExternalRowSorter = {
+      val prefix = SortPrefix(sortOn)
+      val prefixProj = UnsafeProjection.create(Seq(prefix))
+      val prefixComputer = new UnsafeExternalRowSorter.PrefixComputer {
+        private val result = new UnsafeExternalRowSorter.PrefixComputer.Prefix
+        override def computePrefix(row: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
+          val p = prefixProj(row)
+          result.isNull = p.isNullAt(0)
+          result.value = if (result.isNull) prefix.nullValue else p.getLong(0)
+          result
+        }
+      }
+      UnsafeExternalRowSorter.create(schema, rowOrdering, SortPrefixUtils.getPrefixComparator(sortOn),
+        prefixComputer, SparkEnv.get.memoryManager.pageSizeBytes,
+        radix && ties.isEmpty && SortPrefixUtils.canSortFullyWithPrefix(sortOn))
+    }
+  }
+
   /** The distinct declarative aggregates in `exprs`, run through one
     * buffer with generated projections: `init`, `update` per input row,
     * `eval` to one row of results (named `results`), and `bind` to rewrite
@@ -530,6 +639,7 @@ object PointInTimePassExec {
     }).groupBy(_.canonicalized).values.map(_.head).toSeq
     val results: Seq[Attribute] =
       fns.map(f => AttributeReference("agg", f.dataType, nullable = true)())
+    private val resultTypes = results.map(_.dataType).toArray
     private val byFn = fns.map(_.canonicalized).zip(results).toMap
     private val bufAttrs = fns.flatMap(_.aggBufferAttributes)
     private val buf = new SpecificInternalRow(bufAttrs.map(_.dataType))
@@ -548,14 +658,27 @@ object PointInTimePassExec {
     def eval(): UnsafeRow = evalProj(buf)
 
     /** Copy a result row into `row` from slot 0; returns the next slot. */
-    def copyTo(result: InternalRow, row: GenericInternalRow): Int =
-      copyInto(result, results, row, 0)
+    def copyTo(result: InternalRow, row: InternalRow): Int =
+      copyInto(result, resultTypes, row, 0)
   }
 
-  private def copyInto(from: InternalRow, attrs: Seq[Attribute], to: GenericInternalRow, at: Int): Int = {
+  /** Copy the columns of `from`, typed `types`, into `to` from slot `at`
+    * through the typed accessors, so long, int and double values are not
+    * boxed; returns the next free slot. */
+  private def copyInto(from: InternalRow, types: Array[DataType], to: InternalRow, at: Int): Int = {
     var i = 0
-    while (i < attrs.length) { to.update(at + i, from.get(i, attrs(i).dataType)); i += 1 }
-    at + attrs.length
+    while (i < types.length) {
+      if (from.isNullAt(i)) to.setNullAt(at + i)
+      else types(i) match {
+        case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType =>
+          to.setLong(at + i, from.getLong(i))
+        case IntegerType | DateType => to.setInt(at + i, from.getInt(i))
+        case DoubleType => to.setDouble(at + i, from.getDouble(i))
+        case t => to.update(at + i, from.get(i, t))
+      }
+      i += 1
+    }
+    at + types.length
   }
 
   /** One feature table's cursor over the current key's rows: a running
@@ -566,7 +689,7 @@ object PointInTimePassExec {
     private val aggs = new Aggs(fValues, in)
     private val admit = Predicate.create(where, in)
     admit.initialize(part)
-    private val valueAttrs = fValues.map(v => AttributeReference("value", v.dataType, nullable = true)())
+    private val valueTypes = fValues.map(_.dataType).toArray
     private val valueProj = UnsafeProjection.create(fValues.map(aggs.bind), aggs.results)
     private var rows: Iterator[UnsafeRow] = Iterator.empty
     private var peek: UnsafeRow = _
@@ -595,12 +718,12 @@ object PointInTimePassExec {
 
     /** Write this feature's values (or NULLs) into `row` from `at`;
       * returns the next free slot. */
-    def fill(row: GenericInternalRow, at: Int, hit: Boolean): Int =
-      if (hit) copyInto(valueProj(aggs.eval()), valueAttrs, row, at)
+    def fill(row: InternalRow, at: Int, hit: Boolean): Int =
+      if (hit) copyInto(valueProj(aggs.eval()), valueTypes, row, at)
       else {
         var i = 0
-        while (i < valueAttrs.length) { row.setNullAt(at + i); i += 1 }
-        at + valueAttrs.length
+        while (i < valueTypes.length) { row.setNullAt(at + i); i += 1 }
+        at + valueTypes.length
       }
   }
 }

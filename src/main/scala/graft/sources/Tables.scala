@@ -36,8 +36,11 @@ object Tables {
       case _ => df
     }
 
+  /** The table `name` of a testdata directory, read with its memoized
+    * schema ([[parquetSchema]]): only the first read of a file infers it. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
     name match {
       case "events" => normalizeEventsTs(df)
       case _        => df
@@ -57,18 +60,23 @@ object Tables {
     load(spark, sfDir, "events")
   }
 
-  /** Parquet schema by path, memoized for the JVM's lifetime: every
-    * file-stream query needs an explicit schema and used to pay a batch
-    * `spark.read.parquet(...).schema` footer read per RUN (~0.11 s warm
-    * at sf0.1 — ~1.3 s across the suite's streaming rows). Testdata
-    * files never change within a session; a regenerated corpus arrives
-    * in a fresh JVM. */
+  /** Parquet schema of a file, memoized for the JVM's lifetime: inferring
+    * it runs a Spark job that reads the footer (~0.1 s warm at sf0.1), and
+    * every table load and every file-stream query needs the schema. The
+    * memo key is the path plus the file's length and modification time,
+    * taken from one Hadoop `FileStatus` call, so a file rewritten in place
+    * is inferred again. For a directory of part files the key is the
+    * directory's own entry, which a Spark overwrite recreates. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
+      (String, Long, Long), org.apache.spark.sql.types.StructType]()
   def parquetSchema(
-      spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+      spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    schemaCache.computeIfAbsent((path, st.getLen, st.getModificationTime),
+      _ => spark.read.parquet(path).schema)
+  }
 
   /** Streaming reader for the events table with the same `ts`
     * normalization as [[events]]. File streams need an explicit schema, so

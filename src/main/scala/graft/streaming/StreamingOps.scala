@@ -85,7 +85,7 @@ object StreamingOps {
       StructField("op", StringType, nullable = false) +:
         StructField("batch_id", LongType, nullable = false) +: agg.schema.fields)
     val batchFrames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    withScratchCheckpoint(spark, "changelog") { ckpt =>
+    withScratchCheckpoint("changelog") { ckpt =>
       val q = withShufflePartitions(spark, statePartitions)(agg.writeStream
         .outputMode("update")
         .option("checkpointLocation", ckpt)
@@ -181,15 +181,13 @@ object StreamingOps {
     * the drain returns. It lives on tmpfs (/dev/shm, else the JVM temp
     * dir): the per-batch offset/commit logs, the file-source seen-files
     * log and every state-store delta are written through Spark's
-    * default checkpoint manager over [[LocalFs]], and on a RAM-backed
-    * filesystem those create+rename commits cost no disk round-trip.
-    * Deployed continuous queries must keep durable shared-storage
-    * checkpoints — the sinkDir mode and
-    * [[graft.ext.IvfIndex.appendOnIngest]] deliberately do. */
-  private def withScratchCheckpoint[T](
-      spark: org.apache.spark.sql.SparkSession, name: String)(
-      body: String => T): T = {
-    LocalFs.ensure(spark)
+    * default checkpoint manager over [[LocalFs]] (bound by both callers
+    * before their streams are built), and on a RAM-backed filesystem
+    * those create+rename commits cost no disk round-trip. Deployed
+    * continuous queries must keep durable shared-storage checkpoints —
+    * the sinkDir mode and [[graft.ext.IvfIndex.appendOnIngest]]
+    * deliberately do. */
+  private def withScratchCheckpoint[T](name: String)(body: String => T): T = {
     val base =
       if (new java.io.File("/dev/shm").isDirectory)
         java.nio.file.Paths.get("/dev/shm")
@@ -336,7 +334,7 @@ object StreamingOps {
         // including the watermark-advancing no-data batch — append-mode
         // operators emit their finalized windows exactly there)
         val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-        withScratchCheckpoint(spark, name) { ckpt =>
+        withScratchCheckpoint(name) { ckpt =>
           val q = withShufflePartitions(spark, statePartitions)(df.writeStream
             .foreachBatch { (batch: Dataset[Row], _: Long) =>
               graft.functions.GraftFunctions.registerAll(batch.sparkSession)

@@ -76,6 +76,8 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val plan = flagshipPlan(df)
     assert(nodesOf[ShuffleExchangeExec](df).size === 1, plan)
     assert(nodesOf[SortExec](df).size === 1, plan)
+    // on the pass key alone: the walk orders each key's rows in time
+    assert(nodesOf[SortExec](df).head.sortOrder.size === 1, plan)
     assert(nodesOf[FileSourceScanExec](df).size === 1, plan)
     assert(nodesOf[PointInTimePassExec](df).size === 1, plan)
     assert(nodesOf[WindowExec](df).isEmpty, plan)

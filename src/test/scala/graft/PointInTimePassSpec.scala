@@ -59,14 +59,15 @@ class PointInTimePassSpec extends AnyFunSuite with SparkSpec {
     * count(v) at the label time, view sum at the prediction time. */
   private def pipeline(
       df: DataFrame, lookback: Int, delayMin: Int,
-      join: (DataFrame, String, VersionedTable) => DataFrame): DataFrame = {
+      join: (DataFrame, String, VersionedTable) => DataFrame,
+      orderCols: Seq[String] = Seq("id")): DataFrame = {
     val ev = EventTable(df, "ts", Some("k"))
     def of(kind: String, aggs: (org.apache.spark.sql.Column, String)*) =
       VersionedTable.fromEvents(ev.where(col("kind") === kind), "k", aggs: _*)
     val ex = Examples.generate(ev,
       windowAgg = count(when(col("kind") === "error", lit(1))),
       lookback = lookback, trigger = _ >= 1,
-      labelDelay = s"INTERVAL $delayMin MINUTES", orderCols = Seq("id"))
+      labelDelay = s"INTERVAL $delayMin MINUTES", orderCols = orderCols)
     val errs = of("error", sum(col("v")) -> "err_sum", count(lit(1)) -> "err_n")
     val purchases = of("purchase", count(col("v")) -> "pur_n")
     val views = of("view", sum(col("v")) -> "view_sum", count(lit(1)) -> "view_n")
@@ -147,5 +148,57 @@ class PointInTimePassSpec extends AnyFunSuite with SparkSpec {
     assert(m("numMissedLookups") === missed)
     val peak = evs.groupBy(_.key).values.map(_.size).max
     assert(m("peakKeyRows") === peak)
+  }
+
+  test("one key holds all events: tied and NULL times, spilled and reordered in the walk") {
+    // the whole table is one key group past the in-memory buffer, so it
+    // is ordered by the walk's external sorter and read back spilled
+    val evs = sample(evGen(120, 15, hot = true), 31L).map(_.copy(key = Some("h")))
+    val timed = evs.flatMap(_.min)
+    assert(timed.size < evs.size, "no NULL time")
+    assert(timed.distinct.size < timed.size, "no tied time")
+    // the same table with distinct times and no tie order: the sorter's
+    // time prefix alone orders it (a radix sort)
+    val distinct = evs.zip(new scala.util.Random(31L).shuffle(evs.indices.toList))
+      .map { case (e, m) => e.copy(min = if (m == 0) None else Some(m)) }
+    withConf("spark.sql.windowExec.buffer.in.memory.threshold" -> "1",
+        "spark.sql.windowExec.buffer.spill.threshold" -> "2") {
+      for ((table, orderCols) <- Seq(evs -> Seq("id"), distinct -> Nil)) {
+        val df = toDf(table)
+        val got = pipeline(df, 3, 5, fused, orderCols)
+        assert(rows(got) === rows(pipeline(df, 3, 5, reference, orderCols)), s"order by $orderCols")
+        val pass = nodesOf[PointInTimePassExec](got).head
+        def m(name: String) = pass.metrics(name).value
+        assert(m("spillSize") > 0)
+        assert(m("peakKeyRows") === evs.size)
+        assert(m("numReorderedGroups") === 1)
+      }
+    }
+  }
+
+  test("groups that arrive as interleaved time runs are put in time order by the walk") {
+    // each key's rows arrive as three runs, each ascending in time and
+    // all three overlapping, so no concatenation of them is in order
+    val evs = (for {
+      run <- 0 until 3
+      key <- Seq("a", "b", "c")
+      m <- run to 30 by 3
+    } yield (key, m)).toList.zipWithIndex.map { case ((key, m), i) =>
+      Ev(i, Some(key), Some(m), Seq("error", "purchase", "view")(i % 3), Some(i % 7 - 2L))
+    }
+    val df = toDf(evs)
+    def check(spills: Boolean): Unit = {
+      val got = pipeline(df, 1, 4, fused)
+      assert(rows(got) === rows(pipeline(df, 1, 4, reference)))
+      val pass = nodesOf[PointInTimePassExec](got).head
+      assert(pass.metrics("numReorderedGroups").value === 3)
+      assert((pass.metrics("spillSize").value > 0) === spills)
+    }
+    check(spills = false)
+    // each 31-row group outgrows an 8-row buffer, before and after its sort
+    withConf("spark.sql.windowExec.buffer.in.memory.threshold" -> "8",
+        "spark.sql.windowExec.buffer.spill.threshold" -> "16") {
+      check(spills = true)
+    }
   }
 }
