@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+
+import scala.collection.mutable.ArrayBuilder
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -25,6 +29,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (horizon = label delay). In-order delivery per key is assumed for
   * same-timestamp ties split across micro-batches (the reference assumes
   * strictly ascending time globally, App.java:121).
+  *
+  * State layout ([[FlagshipState]], one row per user in the state store):
+  *  - `lastWasError: Boolean`, `errCents: Long`, `purchaseBase: Long`;
+  *  - `purchases: Array[Byte]` (BINARY): the purchase times not yet
+  *    collapsed into `purchaseBase`, as big-endian epoch-µs longs;
+  *  - `pending: Array[Byte]` (BINARY): the pending examples as
+  *    (prediction µs, label µs, err cents) long triples, in arrival order.
+  *
+  * The state holds no collection on purpose. Spark resolves the state
+  * deserializer again for every micro-batch, and the deserializer of a
+  * `Seq` or array field (`List[Long]`, even `Array[Long]`) goes through
+  * `MapObjects`, which draws a fresh lambda-variable id each time: the
+  * generated code differs every batch, misses the codegen cache and is
+  * compiled again (twice per batch, under the cache's lock). A `BINARY`
+  * column deserializes to `Array[Byte]` directly, so the state codec is
+  * compiled once per query. The fold unpacks both fields once per key per
+  * batch and packs them once on `state.update`.
   */
 object StreamingFlagship {
 
@@ -32,14 +53,12 @@ object StreamingFlagship {
       event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
 
-  case class PendingExample(predUs: Long, labelUs: Long, errCents: Long)
-
   case class FlagshipState(
       lastWasError: Boolean,
       errCents: Long,
       purchaseBase: Long,
-      purchaseTs: List[Long],
-      pending: List[PendingExample])
+      purchases: Array[Byte],
+      pending: Array[Byte])
 
   case class TrainingExample(
       _entity: Long,
@@ -68,36 +87,33 @@ object StreamingFlagship {
     if (c < 0) -math.round(-c) else math.round(c)
   }
 
-  private def purchasesAsOf(s: FlagshipState, tUs: Long): Long =
-    s.purchaseBase + s.purchaseTs.count(_ <= tUs)
-
-  private def emitMatured(
-      s: FlagshipState, key: Long, watermarkUs: Long): (FlagshipState, List[TrainingExample]) = {
-    val (ready, waiting) = s.pending.partition(_.labelUs <= watermarkUs)
-    val out = ready.sortBy(p => (p.predUs, p.labelUs)).map { p =>
-      val n = purchasesAsOf(s, p.labelUs)
-      TrainingExample(
-        key,
-        fromMicros(p.predUs),
-        fromMicros(p.labelUs),
-        Some(p.errCents),
-        if (n == 0L) None else Some(n))
-    }
-    // collapse purchases no longer needed by any remaining pending example
-    // (all remaining/future label times exceed the watermark)
-    val (old, recent) = s.purchaseTs.partition(_ <= watermarkUs)
-    (s.copy(
-      purchaseBase = s.purchaseBase + old.size,
-      purchaseTs = recent,
-      pending = waiting), out)
+  private def pack(longs: Array[Long]): Array[Byte] = {
+    val b = ByteBuffer.allocate(longs.length * 8)
+    b.asLongBuffer().put(longs)
+    b.array()
   }
+
+  private def unpack(bytes: Array[Byte]): Array[Long] = {
+    val longs = new Array[Long](bytes.length / 8)
+    ByteBuffer.wrap(bytes).asLongBuffer().get(longs)
+    longs
+  }
+
+  private val Empty = FlagshipState(false, 0L, 0L, Array.emptyByteArray, Array.emptyByteArray)
 
   private def fold(
       key: Long,
       events: Iterator[StreamEvent],
       state: GroupState[FlagshipState]): Iterator[TrainingExample] = {
     val wmUs = state.getCurrentWatermarkMs() * 1000L
-    var s = state.getOption.getOrElse(FlagshipState(false, 0L, 0L, Nil, Nil))
+    val s = state.getOption.getOrElse(Empty)
+    var lastWasError = s.lastWasError
+    var cents = s.errCents
+    val purchases = new ArrayBuilder.ofLong
+    purchases.addAll(unpack(s.purchases))
+    // (prediction µs, label µs, err cents) triples
+    val pending = new ArrayBuilder.ofLong
+    pending.addAll(unpack(s.pending))
 
     if (!state.hasTimedOut) {
       val batch = events.toArray.sortBy(e => (toMicros(e.ts), e.event_id))
@@ -105,10 +121,6 @@ object StreamingFlagship {
       // inclusive, so each run of equal timestamps is summed before any
       // example in it reads the sum (same-ts ties later in event_id order
       // count)
-      var cents = s.errCents
-      var purchases = s.purchaseTs
-      val newPending = List.newBuilder[PendingExample]
-      var lastWasError = s.lastWasError
       var i = 0
       while (i < batch.length) {
         val tUs = toMicros(batch(i).ts)
@@ -120,26 +132,39 @@ object StreamingFlagship {
         while (i < j) {
           val e = batch(i)
           val isError = e.event_type == "error"
-          if (isError && lastWasError) newPending += PendingExample(tUs, tUs + LabelDelayUs, cents)
+          if (isError && lastWasError) pending.addOne(tUs).addOne(tUs + LabelDelayUs).addOne(cents)
           lastWasError = isError
-          if (e.event_type == "purchase") purchases = tUs :: purchases
+          if (e.event_type == "purchase") purchases.addOne(tUs)
           i += 1
         }
       }
-      s = s.copy(
-        lastWasError = lastWasError,
-        errCents = cents,
-        purchaseTs = purchases,
-        pending = s.pending ++ newPending.result())
     }
 
-    val (next, out) = emitMatured(s, key, wmUs)
-    if (next.pending.nonEmpty) {
+    // emit the examples whose label time the watermark has passed
+    val bought = purchases.result()
+    val pend = pending.result()
+    val (ready, waiting) = (0 until pend.length by 3).partition(p => pend(p + 1) <= wmUs)
+    val out = ready.sortBy(p => (pend(p), pend(p + 1))).map { p =>
+      val n = s.purchaseBase + bought.count(_ <= pend(p + 1))
+      TrainingExample(
+        key,
+        fromMicros(pend(p)),
+        fromMicros(pend(p + 1)),
+        Some(pend(p + 2)),
+        if (n == 0L) None else Some(n))
+    }
+    // collapse purchases no longer needed by any remaining pending example
+    // (all remaining/future label times exceed the watermark)
+    val recent = bought.filter(_ > wmUs)
+    val purchaseBase = s.purchaseBase + (bought.length - recent.length)
+
+    def next = FlagshipState(lastWasError, cents, purchaseBase, pack(recent),
+      pack(waiting.flatMap(p => pend.slice(p, p + 3)).toArray))
+    if (waiting.nonEmpty) {
       state.update(next)
       // ceil micros -> ms so the timeout's watermark covers the label time
-      state.setTimeoutTimestamp(Math.floorDiv(next.pending.map(_.labelUs).min + 999L, 1000L))
-    } else if (next.lastWasError || next.purchaseBase > 0 || next.purchaseTs.nonEmpty ||
-      next.errCents != 0) {
+      state.setTimeoutTimestamp(Math.floorDiv(waiting.map(p => pend(p + 1)).min + 999L, 1000L))
+    } else if (lastWasError || purchaseBase > 0 || recent.nonEmpty || cents != 0) {
       state.update(next)
     } else {
       state.remove()

@@ -139,6 +139,66 @@ class StreamingParitySpec extends AnyFunSuite with SparkSpec {
         ev(13, "01:40", 3, "error", 32.0), ev(14, "01:40", 3, "error", 64.0))))
   }
 
+  test("streaming flagship state that grows over micro-batches matures by event-time timeout alone") {
+    val t0 = ts("00:00").getTime
+    def at(id: Long, sec: Int, user: Long, tpe: String, value: Double) =
+      StreamEvent(id, new java.sql.Timestamp(t0 + sec * 1000L), user, tpe, value)
+    // user 1, minute m: two errors (the second fires an example, its sum
+    // negative) and a purchase. Ten minutes per batch over four batches,
+    // all within the label delay: 40 pending examples and 40 purchases
+    // build up in its state, and none matures while its events arrive.
+    def minute(m: Int) = Seq(
+      at(3L * m, 60 * m, 1, "error", -1.25 * (m + 1)),
+      at(3L * m + 1, 60 * m + 20, 1, "error", 0.125 * (m % 3 - 1)),
+      at(3L * m + 2, 60 * m + 40, 1, "purchase", 0.0))
+    val grow = (0 until 4).map { b =>
+      (10 * b until 10 * b + 10).flatMap(minute) :+ at(1000L + b, 600 * b + 300, 2, "view", 0.0)
+    }
+    assertStreamMatchesBatch("flagship_timeout_only", grow ++ Seq(
+      // user 1 buys again between its label times; the batch runs under
+      // the watermark of the last one, so nothing of user 1 matures here
+      Seq(at(2000L, 3900, 1, "purchase", 0.0), at(2001L, 4500, 1, "purchase", 0.0),
+        at(2002L, 4800, 2, "error", -2.0)),
+      // no event of user 1: only its event-time timeout emits, first the
+      // labels up to 01:20, then (after the sentinel) the rest
+      Seq(at(2003L, 10800, 2, "error", -3.0))))
+  }
+
+  test("streaming flagship compiles its state codec once per query, not once per micro-batch") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    val t0 = ts("00:00").getTime
+    // hour h: each of 20 users has two errors (one example) and a purchase.
+    // Every batch updates state; the empty batch that follows it, with the
+    // watermark moved on, matures the hour before's examples by timeout.
+    def hour(h: Int) = (0 until 20).flatMap { u =>
+      val t = t0 + h * 3600000L + u * 60000L
+      val id = (h * 20L + u) * 3
+      Seq(StreamEvent(id, new java.sql.Timestamp(t), u, "error", -1.5),
+        StreamEvent(id + 1, new java.sql.Timestamp(t + 1000L), u, "error", 2.25),
+        StreamEvent(id + 2, new java.sql.Timestamp(t + 2000L), u, "purchase", 0.0))
+    }
+    val input = MemoryStream[StreamEvent]
+    val query = StreamingFlagship(input.toDF())
+      .writeStream.format("memory").queryName("flagship_codegen")
+      .outputMode("append").start()
+    try {
+      // warm-up: the first batches compile the query's stages, and the
+      // third emits its first examples
+      (0 until 3).foreach { h => input.addData(hour(h)); query.processAllAvailable() }
+      val warmBatch = query.lastProgress.batchId
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (3 until 9).foreach { h => input.addData(hour(h)); query.processAllAvailable() }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      val batches = query.recentProgress.count(_.batchId > warmBatch)
+      assert(batches >= 6)
+      assert(spark.table("flagship_codegen").count() > 0)
+      // one compilation per batch is inherent: the late-event filter's
+      // watermark literal changes every batch
+      assert(compiled <= batches, s"$compiled compilations in $batches micro-batches")
+    } finally query.stop()
+  }
+
   test("streaming tumbling window equals batch windowed aggregation") {
     import spark.implicits._
     val events = loadEvents()
