@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * {{{
   * val g = Graft(spark)
   * val games = g.events("GamePlay", gamesDf, time = "ts", key = "user")
-  * val features = g.versioned(games, where = "won = false",
+  * val purchases = g.events("Purchase", purchaseDf, time = "ts", key = "user")
+  * val features = g.versionedWhere(games, "won = false",
   *   "sum(duration)" -> "loss_duration")                    // App.java:47
   * val target = g.versioned(purchases, "count(1)" -> "cnt") // App.java:52
   * val examples = g.examples(games,                          // App.java:64-77

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * (key, changeTime) holding the value that became current at that instant.
   * This is the engine's representation of the reference's "versioned table"
   * (App.java:146-148: "versioned row exposes the most recent row for each
-  * key"), and the right-hand side of [[graft.ops.AsOfJoin]].
+  * key"), and the right-hand side of [[graft.ops.AsOfJoin.asofMerge]].
   *
   * Unlike the reference — which materializes versions from a changelog stream
   * and stamps them with the *current watermark* (AddWatermark.java:18-23, a

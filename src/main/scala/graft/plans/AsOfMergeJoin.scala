@@ -15,16 +15,14 @@ import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan
   * "custom SparkPlan" milestone): a first-class logical operator planned to
   * a co-partitioned, sort-merge physical node.
   *
-  * Compared to the union-merge formulation in [[graft.ops.AsOfJoin]] (one
-  * shuffle over probes+versions, window `last()`), this plays Catalyst's
-  * own game: EnsureRequirements provides hash co-partitioning + per-key
-  * (key, time) sort for BOTH children — so a pre-partitioned/bucketed input
-  * needs NO shuffle at all and AQE handles skew/coalescing — and the merge
-  * itself is a streaming two-pointer pass per partition: each version row
-  * is visited exactly once, no row widening to a union schema, no window
-  * buffering. Semantics are identical (inclusive/exclusive boundary, LEFT
-  * null production, last-version-wins at equal change instants) and pinned
-  * against [[graft.ops.AsOfJoin.asof]] in AsOfMergeSpec.
+  * EnsureRequirements provides hash co-partitioning + per-key (key, time)
+  * sort for BOTH children — so a pre-partitioned/bucketed input needs NO
+  * shuffle at all and AQE handles skew/coalescing — and the merge itself is
+  * a streaming two-pointer pass per partition: each version row is visited
+  * exactly once, with no window buffering. Semantics (inclusive/exclusive
+  * boundary, LEFT null production, last-version-wins at equal change
+  * instants) are pinned against a plain-Scala reference in AsOfMergeSpec.
+  * Built by [[graft.ops.AsOfJoin.asofMerge]].
   */
 case class AsOfJoinNode(
     left: LogicalPlan,
@@ -155,7 +153,7 @@ case class AsOfMergeJoinExec(
   // rows sharing a buffer, unlike a 1:N join's inner emit loop), and
   // within-stage buffering consumers (sort/aggregate) copy on insert as
   // part of their own consume contract. Measured: the copy cost 20M
-  // allocations (~0.3 s) on the AsOfBench BIG case for no correctness gain.
+  // allocations (~0.3 s) on a 20M-probe synthetic case for no correctness gain.
   override def needCopyResult: Boolean = false
 
   override protected def doProduce(ctx: CodegenContext): String = {

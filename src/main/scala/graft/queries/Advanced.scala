@@ -376,10 +376,10 @@ object Advanced {
           countDistinct(col("event_type")).as("n_types"))),
 
     // ---- Catalyst-native as-of merge join --------------------------------
-    // Same as-of semantics as the union-merge operator, but through the
-    // custom logical node + SparkStrategy + AsOfMergeJoinExec physical
-    // operator (graft.plans): co-partitioned two-pointer merge, pinned
-    // against the DuckDB correlated-subquery oracle.
+    // The as-of join through the custom logical node + SparkStrategy +
+    // AsOfMergeJoinExec physical operator (graft.plans): co-partitioned
+    // two-pointer merge, pinned against the DuckDB correlated-subquery
+    // oracle.
     QueryDef(
       "q_asof_merge",
       Some("""

@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * materialization entirely.
   *
   * Inputs arrive as one keyed stream of tagged rows (side 0 = version with
-  * a value, side 1 = probe with an as-of time). Semantics match the batch
-  * [[graft.ops.AsOfJoin]] exactly (inclusive boundary, LEFT nulls):
+  * a value, side 1 = probe with an as-of time). Semantics follow the batch
+  * [[graft.ops.AsOfJoin.asofMerge]] (inclusive boundary, LEFT nulls;
+  * StreamingAsOfSpec compares both against a plain-Scala reference):
   *
   *  - a probe whose as-of time is already covered by the watermark answers
   *    immediately (any version at or before that instant must have arrived,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import graft.core.{EventTable, VersionedTable}
-import graft.ops.{AsOfJoin, Examples}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -21,39 +19,29 @@ object Demo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val events = EventTable(
-      graft.sources.Tables.events(spark, sfDir), "ts", Some("user_id"))
+    // The reference pipeline through the public API: examples where the
+    // last two events of a user are errors, the cumulative error value at
+    // the prediction time, cumulative purchases at the label time.
+    val g = graft.api.Graft(spark)
+    val events = g.events("events_v", graft.sources.Tables.events(spark, sfDir),
+      time = "ts", key = "user_id")
+    val features = g.versionedWhere(events, "event_type = 'error'", "sum(value)" -> "err_value")
+    val target = g.versionedWhere(events, "event_type = 'purchase'", "count(1)" -> "purchases")
+    val examples = g.examples(events,
+      windowAgg = "count(CASE WHEN event_type = 'error' THEN 1 END)", lookback = 1,
+      trigger = "= 2", labelDelay = "INTERVAL 1 HOUR", orderCols = Seq("event_id"))
+    val out = g.pointInTimeJoin(
+      g.pointInTimeJoin(examples, "_prediction_time", features),
+      "_label_time", target)
 
-    // Example generation: two consecutive error events for a user.
-    val examples = Examples.generate(
-      events,
-      windowAgg = count(when(col("event_type") === "error", lit(1))),
-      lookback = 1,
-      trigger = _ === 2,
-      labelDelay = "INTERVAL 1 HOUR",
-      orderCols = Seq("event_id"))
-
-    // Feature: cumulative error value per user; target: cumulative purchases.
-    val features = VersionedTable.fromEvents(
-      events.where(col("event_type") === "error"), "user_id",
-      sum(col("value")) -> "err_value")
-    val target = VersionedTable.fromEvents(
-      events.where(col("event_type") === "purchase"), "user_id",
-      count(lit(1)) -> "purchases")
-
-    val out = AsOfJoin.asof(
-      AsOfJoin.asof(examples, "_entity", "_prediction_time", features),
-      "_entity", "_label_time", target)
-
-    println(s"[demo] examples=${examples.count()} joined=${out.count()}")
+    println(s"[demo] examples=${examples.count()} joined=${out.count()}" +
+      s" (plan has PointInTimePass: ${out.queryExecution.executedPlan.toString.contains("PointInTimePass")})")
     out.orderBy("_prediction_time").show(10, truncate = false)
     out.explain("formatted")
 
-    // Facade surface: the reference's program shape + its temporal-join SQL.
-    val g = graft.api.Graft(spark)
-    val ev2 = g.events("events_v", events.df, time = "ts", key = "user_id")
+    // The reference's temporal-join SQL through the same facade.
     g.registerVersioned("ErrFeatures",
-      g.versionedWhere(ev2, "event_type = 'error'",
+      g.versionedWhere(events, "event_type = 'error'",
         "sum(cast(round(value*100) as bigint))" -> "err_cents"))
     g.sql("SELECT user_id AS _entity, ts AS _prediction_time FROM events_v WHERE event_type = 'purchase'")
       .createOrReplaceTempView("probes")
@@ -64,14 +52,6 @@ object Demo {
       ON probes._entity = f._entity""")
     println(s"[demo] facade temporal-join rows=${viaSql.count()}")
     viaSql.orderBy("_prediction_time").show(3, truncate = false)
-
-    // Catalyst-native as-of: same semantics through the custom operator
-    // (AsOfJoinNode -> AsOfMergeJoinExec); plan shows the merge exec.
-    val native = AsOfJoin.asofMerge(
-      AsOfJoin.asofMerge(examples, "_entity", "_prediction_time", features),
-      "_entity", "_label_time", target)
-    println(s"[demo] native as-of merge rows=${native.count()}" +
-      s" (plan has AsOfMergeJoin: ${native.queryExecution.executedPlan.toString.contains("AsOfMergeJoin")})")
 
     // Quantized similarity search: SQ8 + exact re-rank over embeddings.
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")

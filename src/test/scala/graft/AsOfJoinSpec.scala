@@ -5,6 +5,10 @@ import graft.ops.AsOfJoin
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Hand-valued as-of cases, each run on the operator users call
+  * ([[AsOfJoin.asofMerge]]) and on the plain-Scala [[AsOfReference]], so
+  * the expected values also validate the reference the other as-of specs
+  * compare against. */
 class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
   import org.apache.spark.sql.DataFrame
 
@@ -30,39 +34,56 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
         if (r.isNullAt(2)) None else Some(r.getLong(2))))
       .toSet
 
+  private type AsOf = (DataFrame, String, String, VersionedTable, Boolean, String) => DataFrame
+
+  /** The operator under test, then the reference, by name. */
+  private val both: Seq[(String, AsOf)] =
+    Seq("asofMerge" -> AsOfJoin.asofMerge _, "AsOfReference" -> AsOfReference.apply _)
+
   test("inclusive boundary: version at exactly asOf time is visible") {
-    val got = collect(AsOfJoin.asof(probes(("02:00", "k1")), "k", "t", versions()))
-    assert(got === Set(("k1", "02:00", Some(20L))))
+    for ((name, join) <- both) {
+      val got = collect(join(probes(("02:00", "k1")), "k", "t", versions(), true, "left"))
+      assert(got === Set(("k1", "02:00", Some(20L))), name)
+    }
   }
 
   test("exclusive variant hides the version at the boundary") {
-    val got = collect(
-      AsOfJoin.asof(probes(("02:00", "k1")), "k", "t", versions(), inclusive = false))
-    assert(got === Set(("k1", "02:00", Some(10L))))
+    for ((name, join) <- both) {
+      val got = collect(join(probes(("02:00", "k1")), "k", "t", versions(), false, "left"))
+      assert(got === Set(("k1", "02:00", Some(10L))), name)
+    }
   }
 
   test("probe between versions picks the latest preceding one") {
-    val got = collect(AsOfJoin.asof(probes(("02:30", "k1")), "k", "t", versions()))
-    assert(got === Set(("k1", "02:30", Some(20L))))
+    for ((name, join) <- both) {
+      val got = collect(join(probes(("02:30", "k1")), "k", "t", versions(), true, "left"))
+      assert(got === Set(("k1", "02:30", Some(20L))), name)
+    }
   }
 
   test("LEFT semantics: probe before any version survives with NULL") {
-    val got = collect(AsOfJoin.asof(
-      probes(("00:30", "k1"), ("00:30", "zz")), "k", "t", versions()))
-    assert(got === Set(("k1", "00:30", None), ("zz", "00:30", None)))
+    for ((name, join) <- both) {
+      val got = collect(join(
+        probes(("00:30", "k1"), ("00:30", "zz")), "k", "t", versions(), true, "left"))
+      assert(got === Set(("k1", "00:30", None), ("zz", "00:30", None)), name)
+    }
   }
 
   test("inner join drops version-less probes") {
-    val got = collect(AsOfJoin.asof(
-      probes(("00:30", "k1"), ("02:00", "k1")), "k", "t", versions(), joinType = "inner"))
-    assert(got === Set(("k1", "02:00", Some(20L))))
+    for ((name, join) <- both) {
+      val got = collect(join(
+        probes(("00:30", "k1"), ("02:00", "k1")), "k", "t", versions(), true, "inner"))
+      assert(got === Set(("k1", "02:00", Some(20L))), name)
+    }
   }
 
   test("duplicate probes at the same instant all get the same version") {
-    val got = AsOfJoin.asof(
-      probes(("02:00", "k1"), ("02:00", "k1"), ("04:00", "k1")), "k", "t", versions())
-    assert(got.count() === 3)
-    assert(collect(got) === Set(("k1", "02:00", Some(20L)), ("k1", "04:00", Some(30L))))
+    for ((name, join) <- both) {
+      val got = join(
+        probes(("02:00", "k1"), ("02:00", "k1"), ("04:00", "k1")), "k", "t", versions(), true, "left")
+      assert(got.count() === 3, name)
+      assert(collect(got) === Set(("k1", "02:00", Some(20L)), ("k1", "04:00", Some(30L))), name)
+    }
   }
 
   test("point-in-time immutability: appending later events never changes asOf") {
@@ -76,98 +97,12 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
         EventTable(rows.toDF("ts", "k", "x"), "ts", Some("k")), "k",
         sum(col("x")) -> "s")
     val p = probes(("01:00", "k1"), ("02:30", "k1"), ("04:00", "k1"))
-    val a = AsOfJoin.asof(p, "k", "t", feats(base)).collect().map(_.toSeq).toSet
-    val b = AsOfJoin.asof(p, "k", "t", feats(extended)).collect().map(_.toSeq).toSet
-    assert(a === b)
-  }
-
-  test("asofBroadcast equals the union-merge asof (left and inner, both boundaries)") {
-    val p = probes(("00:30", "k1"), ("01:00", "k1"), ("02:30", "k1"),
-      ("04:00", "k1"), ("01:30", "k2"), ("09:00", "zz"))
-    for (inc <- Seq(true, false); jt <- Seq("left", "inner")) {
-      val viaShuffle = AsOfJoin.asof(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      val viaBroadcast = AsOfJoin.asofBroadcast(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      assert(viaShuffle === viaBroadcast, s"inclusive=$inc joinType=$jt")
+    for ((name, join) <- both) {
+      val a = collect(join(p, "k", "t", feats(base), true, "left"))
+      val b = collect(join(p, "k", "t", feats(extended), true, "left"))
+      assert(a === b, name)
+      assert(a === Set(("k1", "01:00", Some(1L)), ("k1", "02:30", Some(3L)), ("k1", "04:00", Some(6L))), name)
     }
-  }
-
-  test("nullKeyBypass routes NULL-key probes around the shuffle with equal results") {
-    import spark.implicits._
-    val p = Seq((ts("02:00"), "k1"), (ts("02:00"), null), (ts("04:00"), null))
-      .toDF("t", "k")
-    val plain = AsOfJoin.asof(p, "k", "t", versions()).collect().map(_.toSeq).toSet
-    val bypass = AsOfJoin.asof(p, "k", "t", versions(), nullKeyBypass = true)
-      .collect().map(_.toSeq).toSet
-    assert(plain === bypass)
-    assert(bypass.size === 3)
-    val inner = AsOfJoin.asof(p, "k", "t", versions(), joinType = "inner",
-      nullKeyBypass = true).collect()
-    assert(inner.length === 1)
-  }
-
-  test("asofSalted equals asof on every boundary/joinType combo, incl. NULL keys") {
-    import spark.implicits._
-    val p = Seq(
-      (ts("00:30"), Option("k1")), (ts("01:00"), Option("k1")),
-      (ts("02:30"), Option("k1")), (ts("04:00"), Option("k1")),
-      (ts("01:30"), Option("k2")), (ts("09:00"), Option("zz")),
-      (ts("02:00"), Option.empty[String])).toDF("t", "k")
-    for (inc <- Seq(true, false); jt <- Seq("left", "inner"); salts <- Seq(1, 3, 7)) {
-      val plain = AsOfJoin.asof(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      val salted = AsOfJoin.asofSalted(p, "k", "t", versions(), salts, inc, jt)
-        .collect().map(_.toSeq).toSet
-      assert(plain === salted, s"inclusive=$inc joinType=$jt salts=$salts")
-    }
-  }
-
-  test("asofSalted equals asof on real events (hot-key shape, both time axes)") {
-    import org.apache.spark.sql.functions._
-    val sfDir = "/root/testdata/sf0.001"
-    val events = graft.core.EventTable(
-      graft.sources.Tables.events(spark, sfDir), "ts", Some("user_id"))
-    val features = graft.core.VersionedTable.fromEvents(
-      events.where(col("event_type") === "error"), "user_id",
-      sum(expr("cast(round(value * 100) as bigint)")) -> "err_cents")
-    // every purchase probes — user activity is naturally skewed
-    val probes = events.df.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-    val plain = AsOfJoin.asof(probes, "user_id", "ts", features)
-      .collect().map(_.toSeq).toSet
-    val salted = AsOfJoin.asofSalted(probes, "user_id", "ts", features, salts = 8)
-      .collect().map(_.toSeq).toSet
-    assert(plain === salted)
-    assert(plain.nonEmpty)
-  }
-
-  test("NULL-key / NULL-time version rows never match any probe, on every path") {
-    import spark.implicits._
-    // SQL equi-join semantics: a NULL join key matches nothing, and a
-    // version with no change time is undefined — both rows must be inert.
-    // Regression for the versions-side isNotNull filter in asofImpl: without
-    // it, Window.partitionBy(__k) groups NULL-key versions WITH NULL-key
-    // probes and 99 would leak into the NULL-key probe's values.
-    val vdf = Seq(
-      (Option(ts("01:00")), Option("k1"), 10L),
-      (Option(ts("01:00")), Option.empty[String], 99L), // NULL-key version
-      (Option.empty[java.sql.Timestamp], Option("k1"), 77L) // NULL-time version
-    ).toDF("_change_time", "_entity", "v")
-    val vt = VersionedTable(vdf, "_entity", "_change_time", Seq("v"))
-    val p = Seq((ts("02:00"), Option("k1")), (ts("02:00"), Option.empty[String]))
-      .toDF("t", "k")
-    def run(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    val plain = run(AsOfJoin.asof(p, "k", "t", vt))
-    val bypass = run(AsOfJoin.asof(p, "k", "t", vt, nullKeyBypass = true))
-    val bcast = run(AsOfJoin.asofBroadcast(p, "k", "t", vt))
-    assert(plain === bypass)
-    assert(plain === bcast)
-    // k1 sees 10 (not the NULL-time 77); the NULL-key probe survives (LEFT)
-    // with NULL values (not the NULL-key version's 99)
-    assert(plain === Set(
-      Seq(ts("02:00"), "k1", 10L),
-      Seq(ts("02:00"), null, null)))
   }
 
   test("ties at the same change instant collapse to the full cumulative value") {
@@ -178,8 +113,10 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     val vt = VersionedTable.fromEvents(EventTable(events, "ts", Some("k")), "k",
       sum(col("x")) -> "s")
     assert(vt.df.count() === 1)
-    val got = collect(AsOfJoin.asof(probes(("01:00", "k1")), "k", "t", vt)
-      .select(col("t"), col("k"), col("s")))
-    assert(got === Set(("k1", "01:00", Some(7L))))
+    for ((name, join) <- both) {
+      val got = collect(join(probes(("01:00", "k1")), "k", "t", vt, true, "left")
+        .select(col("t"), col("k"), col("s")))
+      assert(got === Set(("k1", "01:00", Some(7L))), name)
+    }
   }
 }

@@ -2,13 +2,16 @@ package graft
 
 import graft.core.{EventTable, VersionedTable}
 import graft.ops.AsOfJoin
+import graft.plans.AsOfMergeJoinExec
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Catalyst-native as-of merge join ([[graft.plans.AsOfMergeJoinExec]])
-  * must be result-identical to the union-merge [[AsOfJoin.asof]] on every
+  * must be result-identical to the plain-Scala [[AsOfReference]] on every
   * boundary/joinType combination, NULL handling included, and must compile
   * to the expected plan shape (co-partitioned sort-merge; no shuffle on a
   * pre-partitioned probe side). */
@@ -34,20 +37,29 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
   test("asofMerge equals asof on all boundary/joinType combinations") {
     val p = probes(("00:30", "k1"), ("01:00", "k1"), ("02:00", "k1"),
       ("02:30", "k1"), ("04:00", "k1"), ("01:30", "k2"), ("09:00", "zz"))
-    for (inc <- Seq(true, false); jt <- Seq("left", "inner")) {
-      val expected = AsOfJoin.asof(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      val got = AsOfJoin.asofMerge(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      assert(got === expected, s"inclusive=$inc joinType=$jt")
-    }
+    // string keys take the generic merge; bigint keys take the unboxed
+    // kernel, generated in whole-stage codegen or interpreted without it
+    val longKeys = (df: DataFrame, k: String) => df.withColumn(k, xxhash64(col(k)))
+    val vt = versions()
+    val longVt = vt.copy(df = longKeys(vt.df, "_entity"))
+    val shapes = Seq(
+      ("string", p, vt, "true"),
+      ("bigint", longKeys(p, "k"), longVt, "true"),
+      ("bigint interpreted", longKeys(p, "k"), longVt, "false"))
+    for ((keys, pk, v, wscg) <- shapes; inc <- Seq(true, false); jt <- Seq("left", "inner"))
+      withConf("spark.sql.codegen.wholeStage" -> wscg) {
+        val expected = AsOfReference(pk, "k", "t", v, inc, jt).collect().map(_.toSeq).toSet
+        val got = AsOfJoin.asofMerge(pk, "k", "t", v, inc, jt).collect().map(_.toSeq).toSet
+        assert(got === expected, s"keys=$keys inclusive=$inc joinType=$jt")
+      }
   }
 
   test("duplicate change instants: the later version row wins (inclusive)") {
-    val got = AsOfJoin.asofMerge(probes(("02:00", "k1")), "k", "t", versions())
-      .collect()
-    assert(got.length === 1)
-    assert(got.head.getLong(2) === 25L)
+    for (join <- Seq(AsOfJoin.asofMerge _, AsOfReference.apply _)) {
+      val got = join(probes(("02:00", "k1")), "k", "t", versions(), true, "left").collect()
+      assert(got.length === 1)
+      assert(got.head.getLong(2) === 25L)
+    }
   }
 
   test("NULL-key and NULL-time probes and versions are inert") {
@@ -64,7 +76,7 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
       (Option.empty[java.sql.Timestamp], Option("k1")))
       .toDF("t", "k")
     val got = AsOfJoin.asofMerge(p, "k", "t", vt).collect().map(_.toSeq).toSet
-    val expected = AsOfJoin.asof(p, "k", "t", vt).collect().map(_.toSeq).toSet
+    val expected = AsOfReference(p, "k", "t", vt).collect().map(_.toSeq).toSet
     assert(got === expected)
     assert(got === Set(
       Seq(ts("02:00"), "k1", 10L),
@@ -94,7 +106,7 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
       .select(col("user_id"), col("ts"),
         (col("ts") + expr("INTERVAL 1 HOUR")).as("later"))
     for (timeCol <- Seq("ts", "later")) {
-      val expected = AsOfJoin.asof(p, "user_id", timeCol, features)
+      val expected = AsOfReference(p, "user_id", timeCol, features)
         .collect().map(_.toSeq).toSet
       val got = AsOfJoin.asofMerge(p, "user_id", timeCol, features)
         .collect().map(_.toSeq).toSet
@@ -109,12 +121,12 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
     val vt = graft.core.VersionedTable(
       vdf.df.repartition(col("_entity")), vdf.keyCol, vdf.timeCol, vdf.valueCols)
     val df = AsOfJoin.asofMerge(p, "k", "t", vt)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = df.queryExecution.executedPlan
     // exactly the two repartition exchanges the caller asked for — the
     // join's distribution requirement is satisfied by both, so a bucketed
     // or pre-shuffled pipeline pays zero additional shuffles
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges === 2, plan)
+    assert(nodesOf[ShuffleExchangeExec](df).size === 2, plan)
+    assert(nodesOf[AsOfMergeJoinExec](df).size === 1, plan)
     assert(df.count() === 2)
   }
 
@@ -130,25 +142,26 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
       .toDF("t", "k", "payload")
     val versionsDf = Seq((ts("01:00"), 1L, 10L), (ts("03:30"), 1L, 20L), (ts("01:00"), 2L, 7L))
       .toDF("_change_time", "_entity", "v")
-    spark.sql("DROP TABLE IF EXISTS graft_bkt_probes")
-    spark.sql("DROP TABLE IF EXISTS graft_bkt_versions")
-    probesDf.write.bucketBy(4, "k").sortBy("k", "t")
-      .mode("overwrite").saveAsTable("graft_bkt_probes")
-    versionsDf.write.bucketBy(4, "_entity").sortBy("_entity", "_change_time")
-      .mode("overwrite").saveAsTable("graft_bkt_versions")
-    val p = spark.table("graft_bkt_probes")
-    val vt = graft.core.VersionedTable(
-      spark.table("graft_bkt_versions"), "_entity", "_change_time", Seq("v"))
-    val df = AsOfJoin.asofMerge(p, "k", "t", vt)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      "bucketed inputs must not shuffle: " + plan.take(2000))
-    val got = df.collect()
-      .map(r => (r.getLong(1), r.getTimestamp(0), if (r.isNullAt(3)) -1L else r.getLong(3)))
-      .toSet
-    assert(got === Set((1L, ts("02:00"), 10L), (1L, ts("04:00"), 20L), (2L, ts("03:00"), 7L)))
-    spark.sql("DROP TABLE IF EXISTS graft_bkt_probes")
-    spark.sql("DROP TABLE IF EXISTS graft_bkt_versions")
+    Seq("graft_bkt_probes", "graft_bkt_versions")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      probesDf.write.bucketBy(4, "k").sortBy("k", "t")
+        .mode("overwrite").saveAsTable("graft_bkt_probes")
+      versionsDf.write.bucketBy(4, "_entity").sortBy("_entity", "_change_time")
+        .mode("overwrite").saveAsTable("graft_bkt_versions")
+      val p = spark.table("graft_bkt_probes")
+      val vt = graft.core.VersionedTable(
+        spark.table("graft_bkt_versions"), "_entity", "_change_time", Seq("v"))
+      val df = AsOfJoin.asofMerge(p, "k", "t", vt)
+      val plan = df.queryExecution.executedPlan
+      assert(nodesOf[ShuffleExchangeExec](df).isEmpty, s"bucketed inputs must not shuffle:\n$plan")
+      assert(nodesOf[AsOfMergeJoinExec](df).size === 1, plan)
+      val got = df.collect()
+        .map(r => (r.getLong(1), r.getTimestamp(0), if (r.isNullAt(3)) -1L else r.getLong(3)))
+        .toSet
+      assert(got === Set((1L, ts("02:00"), 10L), (1L, ts("04:00"), 20L), (2L, ts("03:00"), 7L)))
+    } finally Seq("graft_bkt_probes", "graft_bkt_versions")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("BucketedTables API: save both sides, reload, as-of join with zero exchanges") {
@@ -171,9 +184,9 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
         vt.valueCols === Seq("v"))
       val df = AsOfJoin.asofMerge(
         spark.table("graft_api_probes"), "k", "t", vt)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        "bucketed inputs must not shuffle: " + plan.take(2000))
+      val plan = df.queryExecution.executedPlan
+      assert(nodesOf[ShuffleExchangeExec](df).isEmpty, s"bucketed inputs must not shuffle:\n$plan")
+      assert(nodesOf[AsOfMergeJoinExec](df).size === 1, plan)
       val got = df.collect()
         .map(r => (r.getLong(1), r.getTimestamp(0), if (r.isNullAt(3)) -1L else r.getLong(3)))
         .toSet
@@ -204,15 +217,13 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
       .sortWithinPartitions("k", "t")
     val df = AsOfJoin.asofMerge(p, "k", "t", vt)
     val got = df.collect().map(r => r.getString(1) -> (if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
-    // the scenario only bites with no re-sort above the version side:
-    // exactly the two caller repartition exchanges, no SortExec above them
-    // (unwrap AQE to see the plan that actually ran)
-    val finalPlan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
-    }
-    assert(finalPlan.collect { case s: org.apache.spark.sql.execution.SortExec => s }.isEmpty,
-      s"test precondition broken — a side was re-sorted:\n$finalPlan")
+    // the scenario only bites with no re-sort above the version side: the
+    // plan that ran holds exactly the caller's two repartition exchanges
+    // and two sorts, and nothing the join added
+    val plan = df.queryExecution.executedPlan
+    assert(nodesOf[ShuffleExchangeExec](df).size === 2, plan)
+    assert(nodesOf[SortExec](df).size === 2, s"test precondition broken — a side was re-sorted:\n$plan")
+    assert(nodesOf[AsOfMergeJoinExec](df).size === 1, plan)
     (0 until n).foreach { i =>
       assert(got(f"key_$i%03d") === i * 10L + 1, f"probe key_$i%03d lost its version")
     }
@@ -246,13 +257,12 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
   test("plan shape: merge exec present; pre-partitioned probe side adds no probe shuffle") {
     val p = probes(("02:00", "k1"), ("04:00", "k1")).repartition(col("k"))
     val df = AsOfJoin.asofMerge(p, "k", "t", versions())
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("AsOfMergeJoin"), plan)
+    val plan = df.queryExecution.executedPlan
+    assert(nodesOf[AsOfMergeJoinExec](df).size === 1, plan)
     // one exchange for the version side; the probe side reuses its
-    // existing hash partitioning (repartition's own exchange is below it)
-    val joinPart = plan.substring(plan.indexOf("AsOfMergeJoin"))
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(joinPart).size
-    assert(exchanges === 2, s"expected probe repartition + version exchange only:\n$plan")
+    // existing hash partitioning (repartition's own exchange)
+    assert(nodesOf[ShuffleExchangeExec](df).size === 2,
+      s"expected probe repartition + version exchange only:\n$plan")
     assert(df.count() === 2)
   }
 

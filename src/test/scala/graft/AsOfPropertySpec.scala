@@ -1,14 +1,15 @@
 package graft
 
+import graft.api.Graft
 import graft.core.{EventTable, VersionedTable}
-import graft.ops.AsOfJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests (SURVEY.md §5.2.3) for the as-of primitives, driven by
+/** Property tests (SURVEY.md §5.2.3) for the as-of join users call
+  * (`Graft.pointInTimeJoin`, i.e. `AsOfJoin.asofMerge`), driven by
   * scalacheck generators over random event tables. Each property runs over
   * a fixed set of deterministic seeds (Spark actions are too expensive for
   * hundreds of scalacheck trials). */
@@ -49,9 +50,13 @@ class AsOfPropertySpec extends AnyFunSuite with SparkSpec {
     VersionedTable.fromEvents(
       EventTable(toDf(evs), "ts", Some("k")), "k", sum(col("v")) -> "s")
 
+  private val g = Graft(spark)
+
+  private def asof(probes: DataFrame, vt: VersionedTable, inclusive: Boolean = true): DataFrame =
+    g.pointInTimeJoin(probes, "t", vt, probeKey = "pk", inclusive = inclusive)
+
   private def asofResult(evs: List[Ev], ps: List[(Int, String)]): Set[Seq[Any]] =
-    AsOfJoin.asof(probesDf(ps), "pk", "t", features(evs))
-      .collect().map(_.toSeq).toSet
+    asof(probesDf(ps), features(evs)).collect().map(_.toSeq).toSet
 
   private val seeds = 1L to 6L
 
@@ -70,7 +75,7 @@ class AsOfPropertySpec extends AnyFunSuite with SparkSpec {
     for (seed <- seeds) {
       val evs = sample(evGen, seed)
       val ps = sample(probeGen, seed + 100)
-      val got = AsOfJoin.asof(probesDf(ps), "pk", "t", features(evs))
+      val got = asof(probesDf(ps), features(evs))
         .collect()
         .map(r => (r.getTimestamp(0), r.getString(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
         .toSet
@@ -97,14 +102,14 @@ class AsOfPropertySpec extends AnyFunSuite with SparkSpec {
     for (seed <- seeds) {
       val evs = sample(evGen, seed)
       val ps = sample(probeGen, seed + 100)
-      val exclusive = AsOfJoin.asof(probesDf(ps), "pk", "t", features(evs), inclusive = false)
+      val exclusive = asof(probesDf(ps), features(evs), inclusive = false)
         .collect().map(r => (r.getString(1), r.getTimestamp(0),
           if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
       // shift probes back one microsecond and use inclusive semantics
       import spark.implicits._
       val shifted = ps.map(p => (new java.sql.Timestamp(p._1 * 60000L - 1L), p._2, p._1))
         .toDF("t", "pk", "orig")
-      val viaShift = AsOfJoin.asof(shifted, "pk", "t", features(evs))
+      val viaShift = asof(shifted, features(evs))
         .collect().map(r => (r.getString(1),
           new java.sql.Timestamp(r.getInt(2) * 60000L),
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet

@@ -1,16 +1,15 @@
 package graft
 
-import graft.core.{EventTable, VersionedTable}
-import graft.ops.{AsOfJoin, Examples}
-import org.apache.spark.sql.functions._
+import graft.api.Graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Flagship golden test (SURVEY.md §5.2.1): rebuild the reference's fixtures
-  * (App.java:102-111, 129-131), run the full pipeline — example generation,
-  * feature/target versioned tables, two as-of joins on two different time
-  * axes — and assert exactly the two rows the reference records as expected
-  * output (App.java:80-81). This pins the inclusive as-of semantics derived
-  * in SURVEY.md §2.5.
+  * (App.java:102-111, 129-131), run the full pipeline through the public
+  * `Graft` API, statement for statement as in its scaladoc — event tables,
+  * feature/target versioned tables, example generation, two as-of joins on
+  * two different time axes — and assert exactly the two rows the reference
+  * records as expected output (App.java:80-81). This pins the inclusive
+  * as-of semantics derived in SURVEY.md §2.5.
   */
 class GoldenFlagshipSpec extends AnyFunSuite with SparkSpec {
 
@@ -35,34 +34,27 @@ class GoldenFlagshipSpec extends AnyFunSuite with SparkSpec {
       .map { case (t, u) => (ts(t), u) }
       .toDF("ts", "user")
 
-    val games = EventTable(gamePlay, "ts", Some("user"))
-
-    // Example query (App.java:64-77): both of the last two games lost.
-    val examples = Examples.generate(
-      games,
-      windowAgg = count(nullif(col("won"), lit(true))),
-      lookback = 1,
-      trigger = _ === 2,
-      labelDelay = "INTERVAL 1 HOUR")
+    val g = Graft(spark)
+    val games = g.events("GamePlay", gamePlay, time = "ts", key = "user")
+    val purchases = g.events("Purchase", purchase, time = "ts", key = "user")
 
     // Feature query (App.java:47): sum(duration) of lost games per user.
-    val features = VersionedTable.fromEvents(
-      games.where(col("won") === false),
-      key = "user",
-      sum(col("duration")) -> "loss_duration")
+    val features = g.versionedWhere(games, "won = false", "sum(duration)" -> "loss_duration")
 
     // Target query (App.java:52): count of purchases per user.
-    val target = VersionedTable.fromEvents(
-      EventTable(purchase, "ts", Some("user")),
-      key = "user",
-      count(lit(1)) -> "cnt")
+    val target = g.versioned(purchases, "count(1)" -> "cnt")
+
+    // Example query (App.java:64-77): both of the last two games lost.
+    val examples = g.examples(games,
+      windowAgg = "count(nullif(won, true))", lookback = 1,
+      trigger = "= 2", labelDelay = "INTERVAL 1 HOUR")
 
     // Temporal join #1 at _prediction_time (App.java:200-205),
     // then #2 at _label_time (App.java:228-233) — a different time axis,
     // which here is just a parameter (resolves workaround W4).
-    val joined = AsOfJoin.asof(
-      AsOfJoin.asof(examples, "_entity", "_prediction_time", features),
-      "_entity", "_label_time", target)
+    val joined = g.pointInTimeJoin(
+      g.pointInTimeJoin(examples, "_prediction_time", features),
+      "_label_time", target)
 
     val got = joined
       .select("_entity", "_prediction_time", "_label_time", "loss_duration", "cnt")

@@ -1,8 +1,7 @@
 package graft
 
 import graft.api.Graft
-import graft.core.{EventTable, VersionedTable}
-import graft.ops.AsOfJoin
+import graft.core.EventTable
 import graft.plans.{AsOfMergeJoinExec, PointInTimePass, PointInTimePassExec}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -178,17 +177,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(plan.contains("BroadcastExchange"), plan.take(2000))
     val readSchema = plan.linesIterator.filter(_.contains("ReadSchema")).mkString
     assert(!readSchema.contains("label"), readSchema)
-  }
-
-  test("as-of join is a single shuffle over union(probes, versions)") {
-    import spark.implicits._
-    val probes = Seq((ts("02:00"), "k1")).toDF("t", "k")
-    val versions = VersionedTable(
-      Seq((ts("01:00"), "k1", 1L)).toDF("_change_time", "_entity", "v"),
-      "_entity", "_change_time", Seq("v"))
-    val joined = AsOfJoin.asof(probes, "k", "t", versions)
-    assert(nodesOf[ShuffleExchangeExec](joined).size === 1,
-      joined.queryExecution.executedPlan.toString.take(3000))
   }
 
   test("IVF cell assignment and OPQ rotation are exchange-free map-side passes") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.api.Graft
 import graft.core.{EventTable, VersionedTable}
-import graft.ops.{AsOfJoin, Examples}
+import graft.ops.Examples
 import graft.plans.PointInTimePassExec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The one-pass plan of the composed pipeline (graft.plans.PointInTimePass)
   * against the reference composition it replaces: examples from
   * `Examples.generate`, versioned tables from `VersionedTable.fromEvents`,
-  * joined by the union-merge `AsOfJoin.asof`. Generated event tables, in
+  * joined by the plain-Scala [[AsOfReference]]. Generated event tables, in
   * the style of AsOfPropertySpec, over a fixed set of seeds. */
 class PointInTimePassSpec extends AnyFunSuite with SparkSpec {
 
@@ -79,7 +79,7 @@ class PointInTimePassSpec extends AnyFunSuite with SparkSpec {
 
   private val g = Graft(spark)
   private val fused = (p: DataFrame, t: String, vt: VersionedTable) => g.pointInTimeJoin(p, t, vt)
-  private val reference = (p: DataFrame, t: String, vt: VersionedTable) => AsOfJoin.asof(p, "_entity", t, vt)
+  private val reference = (p: DataFrame, t: String, vt: VersionedTable) => AsOfReference(p, "_entity", t, vt)
 
   // (seed, rows, minute span, hot key, lookback, label delay in minutes);
   // a delay of 10^5 minutes outlasts every table's span

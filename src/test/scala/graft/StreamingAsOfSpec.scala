@@ -38,12 +38,13 @@ class StreamingAsOfSpec extends AnyFunSuite with SparkSpec {
       .zipWithIndex
       .map { case (r, i) => (i.toLong, r.getLong(0), r.getTimestamp(1)) }
 
-    // expected, via the batch primitive
+    // expected, via the plain-Scala reference; the batch operator agrees
     val probesDf = probeRows.toSeq.toDF("probeId", "k", "t")
-    val expected = AsOfJoin.asof(probesDf, "k", "t", features)
-      .collect()
+    def answers(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
       .toMap
+    val expected = answers(AsOfReference(probesDf, "k", "t", features))
+    assert(answers(AsOfJoin.asofMerge(probesDf, "k", "t", features)) === expected)
 
     // streaming feed: versions + probes merged, chunked by time, shuffled
     // within each chunk (out-of-order inside the watermark)
@@ -66,9 +67,7 @@ class StreamingAsOfSpec extends AnyFunSuite with SparkSpec {
       input.addData(Seq(sentinel)); query.processAllAvailable()
     } finally query.stop()
 
-    val got = spark.table("asof_out").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(3)) None else Some(r.getLong(3))))
-      .toMap
+    val got = answers(spark.table("asof_out"))
     assert(got.size === expected.size)
     assert(got === expected)
   }
