@@ -105,6 +105,28 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("NULL-key / NULL-time version rows never match any probe, on every path") {
+    import spark.implicits._
+    // SQL equi-join semantics: a NULL join key matches nothing, and a
+    // version with no change time is undefined — both rows must be inert.
+    val vdf = Seq(
+      (Option(ts("01:00")), Option("k1"), 10L),
+      (Option(ts("01:00")), Option.empty[String], 99L), // NULL-key version
+      (Option.empty[java.sql.Timestamp], Option("k1"), 77L) // NULL-time version
+    ).toDF("_change_time", "_entity", "v")
+    val vt = VersionedTable(vdf, "_entity", "_change_time", Seq("v"))
+    val p = Seq((ts("02:00"), Option("k1")), (ts("02:00"), Option.empty[String]))
+      .toDF("t", "k")
+    for ((name, join) <- both) {
+      val got = join(p, "k", "t", vt, true, "left").collect().map(_.toSeq).toSet
+      // k1 sees 10 (not the NULL-time 77); the NULL-key probe survives (LEFT)
+      // with NULL values (not the NULL-key version's 99)
+      assert(got === Set(
+        Seq(ts("02:00"), "k1", 10L),
+        Seq(ts("02:00"), null, null)), name)
+    }
+  }
+
   test("ties at the same change instant collapse to the full cumulative value") {
     import spark.implicits._
     val events = Seq(
