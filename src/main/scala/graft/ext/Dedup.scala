@@ -423,9 +423,10 @@ object Dedup {
     * Jaccard >= threshold. Fully deterministic (md5 hash family).
     *
     * Plan shape at scale: shingles (1 shuffle) → signatures (1 shuffle,
-    * 9 tiny string columns per doc) → band rows (narrow) → bucket
-    * self-join on (band, bkey) → exact-Jaccard verification only for the
-    * few candidates (broadcast of the candidate set).
+    * 9 tiny string columns per doc) → band rows (narrow) → candidate
+    * pairs from [[CandidatePairs]] (guarded bucket self-join on
+    * (band, bkey)) → exact-Jaccard verification only for the few
+    * candidates (broadcast of the candidate set).
     *
     * CONTRACT — precision is exact (every emitted pair is verified
     * against true Jaccard), recall follows the LSH S-curve
@@ -451,67 +452,23 @@ object Dedup {
     // the signature aggregation's input (min over set == min over multiset)
     val raw = docShingles(docs, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE exchange groups the band rows into per-bucket doc lists, and
-    // BOTH the guard's pair accounting and the candidate pairs read it —
-    // the former formulation shuffled the band rows three times (guard
-    // aggregate + both sides of a (band, bkey) self-join). Buckets with a
-    // single doc can produce neither pairs nor volume, so they are
-    // dropped before the (tiny) frame is cached. The sorted list makes
-    // pair emission deterministic and already doc_a < doc_b ordered.
-    val buckets = minhashBandRows(raw, bands, rowsPerBand)
-      .groupBy("band", "bkey")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"),
-        count(lit(1)).as("c"))
-      .where(col("c") >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // corpus-scale cached blocks must not outlive an abort: a guard
-    // throw would otherwise leave them cached for the session's
-    // lifetime — in a probe/catch-and-continue caller that leak
-    // accumulates into exactly the memory pressure the guard exists
-    // to prevent
-    var candidates: DataFrame = null
-    try {
-      // refuse-before-shuffle accounting: Σ c·(c-1)/2 over the bucket
-      // counts — the SAME cached frame the pair explosion reads, so a
-      // degenerate corpus (every doc sharing a band key) aborts with the
-      // bucket named instead of burying the candidate explosion; the
-      // top-bucket job runs only on the abort path. Bucket LISTS are
-      // linear in the band rows (safe to group before the guard); only
-      // the pair explosion below is quadratic, and it runs after.
-      val cap = candidatePairCap(docs.sparkSession)
-      if (cap > 0) {
-        val total = buckets
-          .agg(coalesce(sum(shiftright(col("c") * (col("c") - 1), 1)),
-            lit(0L))).head.getLong(0)
-        enforceCandidateCap("minhashNearDup", total, cap,
-          buckets.select(concat_ws("/", col("band"), col("bkey")).as("k"),
-              shiftright(col("c") * (col("c") - 1), 1).as("p"))
-            .orderBy(col("p").desc).limit(5).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toSeq)
-      }
-      // all i<j pairs within each bucket, straight off the sorted lists —
-      // map-side (no join), same multiset of pairs the self-join produced
-      candidates = buckets
-        .select(explode(col("ds")).as("doc_a"), col("ds"))
-        .select(col("doc_a"),
-          explode(expr("filter(ds, x -> x > doc_a)")).as("doc_b"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try CandidatePairs.self("minhashNearDup", bandKeyed(raw, bands, rowsPerBand)) { c =>
+      val candidates = c.hold(c.pairs)
       val candDocs = candidates.select(col("doc_a").as("doc_id"))
         .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
       val shCand = raw.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      // materialize verified pairs (tiny by construction), then release
-      // the corpus-sized intermediates — downstream consumers (cluster
-      // resolution, reporting) must not inherit cached blocks or a plan
-      // that re-embeds this whole DAG into every one of their actions
+      // materialize verified pairs (tiny by construction): downstream
+      // consumers (cluster resolution, reporting) must not inherit cached
+      // blocks or a plan that re-embeds this whole DAG into every action
       Lineage.cut(
         jaccardFor(candidates, shCand).where(col("jaccard") >= threshold))
-    } finally {
-      raw.unpersist()
-      buckets.unpersist()
-      if (candidates != null) candidates.unpersist()
-    }
+    } finally { raw.unpersist(); () }
   }
+
+  /** [[minhashBandRows]] with the bucket key named as [[CandidatePairs]]
+    * reads it. */
+  private def bandKeyed(sh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    minhashBandRows(sh, bands, rowsPerBand).withColumnRenamed("bkey", "key")
 
   /** Incremental near-dup: detect which documents of a NEW batch are
     * near-duplicates of an EXISTING corpus — the dedup pass every
@@ -526,7 +483,8 @@ object Dedup {
     * recurring ingest, build a persisted [[DedupIndex]] once and probe it
     * with [[DedupIndex.searchAgainst]] (identical output, spec-pinned):
     * per-batch work is then O(batch + candidates), never O(corpus). Doc
-    * ids must be distinct across the two frames.
+    * ids must be distinct across the two frames. Candidates and the
+    * volume guard come from [[CandidatePairs.against]].
     * Output: (doc_id [batch], dup_of [corpus], jaccard). */
   def minhashNearDupAgainst(
       corpus: DataFrame,
@@ -539,25 +497,23 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bSh = docShingles(batch, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cBands = minhashBandRows(cSh, bands, rowsPerBand)
-      .select(col("doc_id").as("doc_b"), col("band"), col("bkey"))
-    val bBands = minhashBandRows(bSh, bands, rowsPerBand)
-      .select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-    // cross-side candidates only: batch x corpus, never corpus x corpus
-    val candidates = bBands.join(cBands, Seq("band", "bkey"))
-      .select("doc_a", "doc_b")
-      .distinct()
+    // the probe side is read twice (bucket counts, candidate join): its
+    // signatures are computed once
+    val bBands = bandKeyed(bSh, bands, rowsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candDocs = candidates.select(col("doc_a").as("doc_id"))
-      .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
-    val shCand = cSh.union(bSh)
-      .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-    val verified = Lineage.cut(
-      jaccardFor(candidates, shCand).where(col("jaccard") >= threshold)
-        .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_of"),
-          col("jaccard")))
-    cSh.unpersist(); bSh.unpersist(); candidates.unpersist()
-    verified
+    // cross-side candidates only: batch x corpus, never corpus x corpus
+    try CandidatePairs.against("minhashNearDupAgainst",
+        bBands, bandKeyed(cSh, bands, rowsPerBand)) { c =>
+      val candidates = c.hold(c.pairs)
+      val candDocs = candidates.select(col("doc_a").as("doc_id"))
+        .union(candidates.select(col("doc_b").as("doc_id"))).distinct()
+      val shCand = cSh.union(bSh)
+        .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
+      Lineage.cut(
+        jaccardFor(candidates, shCand).where(col("jaccard") >= threshold)
+          .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_of"),
+            col("jaccard")))
+    } finally { cSh.unpersist(); bSh.unpersist(); bBands.unpersist(); () }
   }
 
   /** Resolve near-duplicate PAIRS into duplicate CLUSTERS and pick a

@@ -217,7 +217,10 @@ object DedupIndex {
     * small: a multi-thousand-value IN predicate stops reaching the
     * parquet reader as a pushable filter and just burns planner/eval
     * time, while the scan+join path broadcasts the batch side and reads
-    * the index once — the crossover measured around a few thousand keys. */
+    * the index once — the crossover measured around a few thousand keys.
+    * Candidates and the volume guard (Σ |batch bucket| × |corpus bucket|)
+    * come from [[CandidatePairs.against]]; the candidate corpus ids are
+    * read off its matched index rows. */
   def searchAgainst(
       index: Loaded, batch: DataFrame, threshold: Double,
       maxInList: Int = 2048): DataFrame = {
@@ -226,57 +229,48 @@ object DedupIndex {
     val bBands = Dedup.minhashBandRows(bSh, index.bands, index.rowsPerBand)
       .persist(Lvl)
     val bSets = hashedSets(bSh).persist(Lvl)
-
-    val probeKeys = bBands.select("bkey").distinct()
-      .limit(maxInList + 1).collect().map(_.getString(0))
-    val corpusBands0 = spark.read.parquet(s"${index.path}/bands")
-    val corpusBands =
-      if (probeKeys.length <= maxInList) {
-        val prefixes = probeKeys.map(_.substring(0, 1)).distinct.toIndexedSeq
-        corpusBands0.where(col("bp").isin(prefixes: _*) &&
-          col("bkey").isin(probeKeys.toIndexedSeq: _*))
-      } else corpusBands0
-    val candidates = bBands.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-      .join(corpusBands.select(col("doc_id").as("doc_b"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .select("doc_a", "doc_b").distinct()
-      .persist(Lvl)
-
-    val candIds = candidates.select("doc_b").distinct()
-      .limit(maxInList + 1).collect().map(_.getLong(0))
-    val corpusSets0 = spark.read.parquet(s"${index.path}/sets")
-    val corpusSets =
-      if (candIds.length <= maxInList) {
-        val dps = candIds.map(id => ((id % 16) + 16) % 16).distinct.toIndexedSeq
-        corpusSets0.where(col("dp").isin(dps: _*) &&
-          col("doc_id").isin(candIds.toIndexedSeq: _*))
-      } else corpusSets0
-    // the candIds collect above already measured the candidate set: when
-    // it fit the IN-list bound, broadcast the candidate pairs so the two
-    // verification joins stream the set frames instead of shuffling them
-    // by doc id (the giant-backfill fallback keeps planner-chosen joins)
-    val candB =
-      if (candIds.length <= maxInList) broadcast(candidates) else candidates
-    // the intersection is projected to a BARRIER-wrapped attribute FIRST:
-    // codegen has no cross-expression CSE, and the jaccard>=t filter
-    // would otherwise substitute the whole division — two-pointer merge
-    // included — into the join condition AND keep it in the project
-    // (measured: 4 kernel evaluations per candidate pair in the plan;
-    // the barrier pins it to one)
-    val out = candB
-      .join(bSets.select(col("doc_id").as("doc_a"), col("seth").as("ha"),
-        col("n_sh").as("na")), Seq("doc_a"))
-      .join(corpusSets.select(col("doc_id").as("doc_b"), col("seth").as("hb"),
-        col("n_sh").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
-        graft.functions.PlanBarrier(spark, graft.functions.SortedIntersect(
-          spark, col("ha"), col("hb")).cast("double")).as("c"))
-      .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_of"),
-        (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-    val cut = Lineage.cut(out)
-    bSh.unpersist(); bBands.unpersist(); bSets.unpersist(); candidates.unpersist()
-    cut
+    try {
+      val probeKeys = bBands.select("bkey").distinct()
+        .limit(maxInList + 1).collect().map(_.getString(0))
+      val corpusBands0 = spark.read.parquet(s"${index.path}/bands")
+      val corpusBands =
+        if (probeKeys.length <= maxInList) {
+          val prefixes = probeKeys.map(_.substring(0, 1)).distinct.toIndexedSeq
+          corpusBands0.where(col("bp").isin(prefixes: _*) &&
+            col("bkey").isin(probeKeys.toIndexedSeq: _*))
+        } else corpusBands0
+      CandidatePairs.against("dedupIndexSearchAgainst",
+          bBands.withColumnRenamed("bkey", "key"),
+          corpusBands.select(col("doc_id"), col("band"), col("bkey").as("key"))) { c =>
+        val candIds = c.indexDocs.distinct()
+          .limit(maxInList + 1).collect().map(_.getLong(0))
+        val corpusSets0 = spark.read.parquet(s"${index.path}/sets")
+        val corpusSets =
+          if (candIds.length <= maxInList) {
+            val dps = candIds.map(id => ((id % 16) + 16) % 16).distinct.toIndexedSeq
+            corpusSets0.where(col("dp").isin(dps: _*) &&
+              col("doc_id").isin(candIds.toIndexedSeq: _*))
+          } else corpusSets0
+        // the intersection is projected to a BARRIER-wrapped attribute
+        // FIRST: codegen has no cross-expression CSE, and the jaccard>=t
+        // filter would otherwise substitute the whole division —
+        // two-pointer merge included — into the join condition AND keep
+        // it in the project (measured: 4 kernel evaluations per candidate
+        // pair in the plan; the barrier pins it to one)
+        val out = c.broadcastIf(c.pairs, CandidatePairs.PairBytes)
+          .join(bSets.select(col("doc_id").as("doc_a"), col("seth").as("ha"),
+            col("n_sh").as("na")), Seq("doc_a"))
+          .join(corpusSets.select(col("doc_id").as("doc_b"), col("seth").as("hb"),
+            col("n_sh").as("nb")), Seq("doc_b"))
+          .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
+            graft.functions.PlanBarrier(spark, graft.functions.SortedIntersect(
+              spark, col("ha"), col("hb")).cast("double")).as("c"))
+          .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_of"),
+            (col("c") / (col("na") + col("nb") - col("c"))).as("jaccard"))
+          .where(col("jaccard") >= threshold)
+        Lineage.cut(out)
+      }
+    } finally { bSh.unpersist(); bBands.unpersist(); bSets.unpersist(); () }
   }
 
   /** Near-dup-on-ingest: score every arriving microbatch against the

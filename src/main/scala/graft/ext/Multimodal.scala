@@ -486,7 +486,10 @@ object Multimodal {
     * containment/winnowing prefix filters); verification is one
     * popcount per candidate. Requires maxHamming < 4 for the
     * losslessness argument; raise the band count for looser
-    * thresholds. Input: (doc_id, `hashCol`: long); output:
+    * thresholds. Candidates and the volume guard (a degenerate media
+    * corpus — mass-replicated payloads, or silent recordings that all
+    * fingerprint identically — aborts with its bucket named) come from
+    * [[CandidatePairs.self]]. Input: (doc_id, `hashCol`: long); output:
     * (doc_a, doc_b, hamming), doc_a < doc_b. */
   private def bandedHamming64(
       op: String, hashes: DataFrame, hashCol: String,
@@ -496,40 +499,25 @@ object Multimodal {
     val h = hashes.select(col("doc_id"), col(hashCol).as("hv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val bands = h.select(col("doc_id"), col("hv"),
+      // materialized first: the typed hash kernels leave the planner no
+      // size estimate, and CandidatePairs sizes its band-row exchange
+      // from the cached hashes' real one
+      h.count()
+      val bandRows = h.select(col("doc_id"),
         explode(expr("transform(sequence(0, 3), " +
-          "b -> struct(b as band, shiftright(hv, 16 * b) & 65535 as bval))"))
+          "b -> struct(b as band, cast(shiftright(hv, 16 * b) & 65535 as int) as key))"))
           .as("bb"))
-        .select(col("doc_id"), col("hv"), col("bb.band").as("band"),
-          col("bb.bval").as("bval"))
-      // refuse-before-shuffle accounting (the Dedup.minhashNearDup rule):
-      // a degenerate media corpus — mass-replicated payloads, or silent/
-      // constant recordings that all fingerprint identically — collides
-      // the band buckets and makes the self-join quadratic; Σ c·(c-1)/2
-      // over one small aggregation aborts it with the bucket named
-      val cap = Dedup.candidatePairCap(h.sparkSession)
-      if (cap > 0) {
-        val perBucket = bands.groupBy("band", "bval")
-          .agg(count(lit(1)).as("c"))
-          .select(concat_ws("/", col("band"), col("bval")).as("k"),
-            shiftright(col("c") * (col("c") - 1), 1).as("p"))
-        val total = perBucket.agg(coalesce(sum("p"), lit(0L))).head.getLong(0)
-        Dedup.enforceCandidateCap(op, total, cap,
-          perBucket.orderBy(col("p").desc).limit(5).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toSeq)
+        .select(col("doc_id"), col("bb.band").as("band"), col("bb.key").as("key"))
+      CandidatePairs.self(op, bandRows) { c =>
+        val out = c.pairs
+          .join(h.select(col("doc_id").as("doc_a"), col("hv").as("ha")), "doc_a")
+          .join(h.select(col("doc_id").as("doc_b"), col("hv").as("hb")), "doc_b")
+          .select(col("doc_a"), col("doc_b"),
+            expr("bit_count(ha ^ hb)").cast("long").as("hamming"))
+          .where(col("hamming") <= maxHamming)
+        Lineage.cut(out)
       }
-      val cand = bands.select(col("doc_id").as("doc_a"), col("hv").as("ha"),
-          col("band"), col("bval"))
-        .join(bands.select(col("doc_id").as("doc_b"), col("hv").as("hb"),
-          col("band"), col("bval")), Seq("band", "bval"))
-        .where(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b", "ha", "hb").distinct()
-      val out = cand
-        .select(col("doc_a"), col("doc_b"),
-          expr("bit_count(ha ^ hb)").cast("long").as("hamming"))
-        .where(col("hamming") <= maxHamming)
-      Lineage.cut(out)
-    } finally h.unpersist()
+    } finally { h.unpersist(); () }
   }
 
   /** Perceptual near-duplicate pairs: payloads whose aHashes are within

@@ -175,8 +175,9 @@ object Similarity {
     *
     * Plan shape: hyperplane signatures are one map-side graft_matvec pass
     * (no exchange), band rows are narrow (id, band, value), candidates
-    * come from one equi-join on (band, value), and verification touches
-    * only candidate vectors (semi-join pruned). Input: (doc_id,
+    * and the volume guard come from [[CandidatePairs.self]] (one exchange
+    * of band rows on (band, value)), and verification touches only
+    * candidate vectors (semi-join pruned). Input: (doc_id,
     * v: array<double>); zero-norm rows are dropped (cosine undefined).
     * Output: (doc_a, doc_b, sim) with doc_a < doc_b.
     *
@@ -280,123 +281,76 @@ object Similarity {
         graft.functions.PlanBarrier(spark, sqrt(dot(col("v"), col("v")))))
       .where(col("nrm") > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nBits = if (bits > 0) bits else srpAutoBits(prepped.count())
-    val nBands = if (bands > 0) bands else srpAutoBands(nBits)
-    val h = nBits * nBands
-    val flat = srpHyperplanes(h, dim, seed)
-    // band values AND the full packed signature come from ONE projection
-    // pass (graft_matvec → graft_sign_bands / graft_pack_signs, all
-    // kernels, all inside the scan's codegen span — a transform/aggregate
-    // HOF here would re-evaluate the inlined matVec per element access,
-    // see [[SignBands]]'s scaladoc) and are cached together: both sides
-    // of the candidate self-join and the hamming filter read them.
-    val proj = graft.functions.VectorExpressions.matVecConst(
-      spark, flat, col("v"), h)
-    val sigs = prepped
-      .withColumn("__proj", proj)
-      .select(
-        col("doc_id"),
-        graft.functions.VectorExpressions.signBands(
-          spark, col("__proj"), nBits, nBands).as("bb"),
-        graft.functions.VectorExpressions.packSigns(
-          spark, col("__proj")).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // corpus-scale cached blocks must not outlive a guard abort (the
-    // minhashNearDup rule): unpersist in finally, not after the cut
-    var survivors: DataFrame = null
-    var buckets: DataFrame = null
+    var sigs: DataFrame = null
     try {
-      // ONE exchange groups the band rows into per-bucket doc lists; the
-      // guard accounting AND the candidate pairs both read it (the former
-      // formulation shuffled the band rows three times: guard aggregate +
-      // both sides of a (band, bval) self-join). Single-doc buckets can
-      // produce neither pairs nor volume — dropped before the cache.
-      buckets = sigs
-        .select(col("doc_id"), posexplode(col("bb")).as(Seq("band", "bval")))
-        .groupBy("band", "bval")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ds"),
-          count(lit(1)).as("c"))
-        .where(col("c") >= 2)
+      val nBits = if (bits > 0) bits else srpAutoBits(prepped.count())
+      val nBands = if (bands > 0) bands else srpAutoBands(nBits)
+      val h = nBits * nBands
+      val flat = srpHyperplanes(h, dim, seed)
+      // band values AND the full packed signature come from ONE projection
+      // pass (graft_matvec → graft_sign_bands / graft_pack_signs, all
+      // kernels, all inside the scan's codegen span — a transform/aggregate
+      // HOF here would re-evaluate the inlined matVec per element access,
+      // see [[SignBands]]'s scaladoc) and are cached together: the band
+      // rows and the hamming filter both read them.
+      val proj = graft.functions.VectorExpressions.matVecConst(
+        spark, flat, col("v"), h)
+      sigs = prepped
+        .withColumn("__proj", proj)
+        .select(
+          col("doc_id"),
+          graft.functions.VectorExpressions.signBands(
+            spark, col("__proj"), nBits, nBands).as("bb"),
+          graft.functions.VectorExpressions.packSigns(
+            spark, col("__proj")).as("sig"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // refuse-before-shuffle accounting (the minhashNearDup recipe):
-      // Σ c·(c-1)/2 over the bucket counts, so a degenerate embedding
-      // corpus (mass-identical vectors collapsing every band bucket)
-      // aborts with the hot buckets named instead of burying the
-      // candidate explosion. Covers semanticDedup too (it generates
-      // pairs exclusively through here). The top-bucket job is by-name —
-      // paid only on the abort path. Bucket lists are linear in the band
-      // rows; only the pair explosion is quadratic, and it runs after.
-      val cap = Dedup.candidatePairCap(spark)
-      var totalOpt: Option[Long] = None
-      if (cap > 0) {
-        val total = buckets
-          .agg(coalesce(sum(shiftright(col("c") * (col("c") - 1), 1)),
-            lit(0L))).head.getLong(0)
-        totalOpt = Some(total)
-        Dedup.enforceCandidateCap("srpNearDup", total, cap,
-          buckets.select(concat_ws("/", col("band"), col("bval")).as("k"),
-              shiftright(col("c") * (col("c") - 1), 1).as("p"))
-            .orderBy(col("p").desc).limit(5).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toSeq)
+      val bandRows = sigs.select(col("doc_id"),
+        posexplode(col("bb")).as(Seq("band", "key")))
+      CandidatePairs.self("srpNearDup", bandRows) { c =>
+        // HAMMING PREFILTER: candidates carry only the two h-bit
+        // signatures (h/64 longs each — e.g. 24 longs vs 128 doubles +
+        // norm), and a popcount gate discards nearly every random
+        // collision before any vector is shipped. The gate is
+        // h·acos(t)/π + 3√h: the signature hamming of a TRUE pair at
+        // cosine exactly t concentrates at h·acos(t)/π with sd ≤ √h/2, so
+        // the margin is ≥ 6σ — a drop probability < 1e-9 per pair,
+        // deterministic per corpus (seeded hyperplanes), re-verified vs
+        // brute force by tools/SrpCheck (see the CONTRACT paragraph
+        // above). Exact cosine then touches only survivors (~true pairs),
+        // so the expensive verification join runs on thousands of rows,
+        // not millions. Each pair-side join broadcasts when the accounted
+        // pairs times the side's row width fit the broadcast threshold, so
+        // the corpus-sized signature and vector frames stream from cache
+        // instead of being shuffled by doc id.
+        val hamMax = srpHamMax(h, threshold, hamSigma)
+        val sigBytes = 8L * ((h + 63) / 64)
+        val vecBytes = 8L * dim + 8L
+        val survivors = c.hold(c.broadcastIf(
+          c.broadcastIf(c.pairs, CandidatePairs.PairBytes)
+            .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a"),
+          CandidatePairs.PairBytes + sigBytes)
+          .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
+          .where(graft.functions.VectorExpressions.hamming(
+            spark, col("sa"), col("sb")) <= hamMax)
+          .select("doc_a", "doc_b"))
+        val candIds = survivors.select(col("doc_a").as("doc_id"))
+          .union(survivors.select(col("doc_b").as("doc_id"))).distinct()
+        val vv = prepped.join(broadcast(candIds), Seq("doc_id"), "left_semi")
+        val out = c.broadcastIf(
+          c.broadcastIf(survivors, CandidatePairs.PairBytes)
+            .join(vv.select(col("doc_id").as("doc_a"), col("v").as("va"), col("nrm").as("na")), "doc_a"),
+          CandidatePairs.PairBytes + vecBytes)
+          .join(vv.select(col("doc_id").as("doc_b"), col("v").as("vb"), col("nrm").as("nb")), "doc_b")
+          .select(col("doc_a"), col("doc_b"),
+            (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
+          .where(col("cos") >= threshold)
+          .select(col("doc_a"), col("doc_b"), round(col("cos"), 6).as("sim"))
+        Lineage.cut(out)
       }
-      // the guard's accounted volume doubles as a size-adaptive join
-      // plan: when the pair volume is measured small, broadcast the
-      // candidate side of the hamming/verify joins so the corpus-sized
-      // signature and vector frames are never shuffled by doc id (they
-      // stream from cache under a broadcast hash join). Past the bound —
-      // or with the guard disabled, where no measurement exists — fall
-      // back to plain joins and let the planner decide. 2M pairs ≈ tens
-      // of MB broadcast; scales with the measurement, not with local
-      // core count.
-      val smallCand = totalOpt.exists(_ <= 2000000L)
-      def maybeBroadcast(df: DataFrame): DataFrame =
-        if (smallCand) broadcast(df) else df
-      // all i<j pairs within each bucket, straight off the sorted lists —
-      // map-side (no join), the same pair set the self-join produced
-      val candidates = buckets
-        .select(explode(col("ds")).as("doc_a"), col("ds"))
-        .select(col("doc_a"),
-          explode(expr("filter(ds, x -> x > doc_a)")).as("doc_b"))
-        .distinct()
-      // HAMMING PREFILTER: candidates carry only the two h-bit signatures
-      // (h/64 longs each — e.g. 24 longs vs 128 doubles + norm), and a
-      // popcount gate discards nearly every random collision before any
-      // vector is shipped. The gate is h·acos(t)/π + 3√h: the signature
-      // hamming of a TRUE pair at cosine exactly t concentrates at
-      // h·acos(t)/π with sd ≤ √h/2, so the margin is ≥ 6σ — a drop
-      // probability < 1e-9 per pair, deterministic per corpus (seeded
-      // hyperplanes), re-verified vs brute force by tools/SrpCheck
-      // (pair-exact at sf0.01/sf0.1; 2559/2560 at x10, the one miss a
-      // BAND-recall boundary pair — see the CONTRACT paragraph above — not
-      // a hamming drop). Exact cosine then touches only
-      // survivors (~true pairs), so the expensive verification join runs
-      // on thousands of rows, not millions.
-      val hamMax = srpHamMax(h, threshold, hamSigma)
-      survivors = maybeBroadcast(
-        maybeBroadcast(candidates)
-          .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a"))
-        .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
-        .where(graft.functions.VectorExpressions.hamming(
-          spark, col("sa"), col("sb")) <= hamMax)
-        .select("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val candIds = survivors.select(col("doc_a").as("doc_id"))
-        .union(survivors.select(col("doc_b").as("doc_id"))).distinct()
-      val vv = prepped.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      val out = maybeBroadcast(
-        maybeBroadcast(survivors)
-          .join(vv.select(col("doc_id").as("doc_a"), col("v").as("va"), col("nrm").as("na")), "doc_a"))
-        .join(vv.select(col("doc_id").as("doc_b"), col("v").as("vb"), col("nrm").as("nb")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
-        .where(col("cos") >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("cos"), 6).as("sim"))
-      Lineage.cut(out)
     } finally {
       prepped.unpersist()
-      sigs.unpersist()
-      if (buckets != null) buckets.unpersist()
-      if (survivors != null) survivors.unpersist()
+      if (sigs != null) sigs.unpersist()
+      ()
     }
   }
 

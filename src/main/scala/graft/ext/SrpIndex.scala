@@ -85,6 +85,13 @@ object SrpIndex {
     sigs.select(col("doc_id"), posexplode(col("bb")).as(Seq("band", "bval")))
       .select(col("doc_id"), bkeyOf(col("band"), col("bval")).as("bkey"))
 
+  /** Packed (doc_id, bkey) band rows as the (doc_id, band, key) rows
+    * [[CandidatePairs]] buckets on: band = the high 32 bits, key = the
+    * zero-extended band value — the same buckets as bkey itself. */
+  private def bucketRows(bands: DataFrame): DataFrame =
+    bands.select(col("doc_id"), shiftright(col("bkey"), 32).as("band"),
+      col("bkey").bitwiseAND(lit(0xffffffffL)).as("key"))
+
   /** Project and band `vecs` (doc_id, v: array<double>) ONCE; write the
     * band rows and verification signatures partitioned for pruned probe
     * reads. `bits`/`bands` auto-size from the corpus count with
@@ -180,22 +187,14 @@ object SrpIndex {
     * full index scan joined against the batch (the giant-backfill
     * regime), and the key distinct is SKIPPED outright when the batch's
     * band-row count (known exactly: docs × bands) already rules the
-    * IN-list out. The guard and the candidate join share one corpus
-    * pass: each matched corpus band row is tagged with its bucket's
-    * batch COUNT (a long — linear in matched rows, safe to materialize
-    * pre-guard, unlike anything pair-shaped), the guard total
-    * Σ |batch bucket| × |corpus bucket| is one sum over that tagged
-    * frame, and the candidate join reuses it as its corpus side — a
-    * degenerate batch (mass-identical embeddings collapsing a band
-    * bucket) refuses with the hot buckets named before any pair row
-    * exists ([[Dedup.enforceCandidateCap]]; covers the streaming form
-    * too, which probes exclusively through here). The sigs-pruning id
-    * list reads off the tagged frame directly (a corpus doc is in some
-    * candidate pair iff it has a matched row), so the pair join, its
-    * distinct, the hamming prefilter and the exact-cosine verify all
-    * fuse into the caller's one terminal action. Signature and vector
-    * columns are read for candidates only, in that order — vectors ship
-    * solely for hamming survivors. */
+    * IN-list out. Candidates and the volume guard come from
+    * [[CandidatePairs.against]] (which also guards the streaming form,
+    * probing exclusively through here); the sigs-pruning id list reads
+    * off its matched index rows, so the pair join, its distinct, the
+    * hamming prefilter and the exact-cosine verify all fuse into one
+    * terminal action. Signature and vector columns are read for
+    * candidates only, in that order — vectors ship solely for hamming
+    * survivors. */
   def searchAgainst(
       index: Loaded, batch: DataFrame, threshold: Double,
       maxInList: Int = 2048): DataFrame = {
@@ -209,15 +208,14 @@ object SrpIndex {
     val bSigs = signatures(
       batch, index.dim, index.bits, index.bands, index.seed).persist(Lvl)
     val bBands = bandRows(bSigs).persist(Lvl)
-    var matched: DataFrame = null
     try {
       // every batch doc emits exactly `bands` band rows, so the batch's
       // band-row count bounds what the probe-key distinct can return:
       // past 32x the IN-list budget only a >=32x mass-duplicated batch
       // could still fit, so skip the distinct job outright (such a batch
-      // loses partition pruning — nothing else; the volume guard below
-      // still governs it) instead of paying a shuffle just to learn
-      // "too many keys"
+      // loses partition pruning — nothing else; the volume guard still
+      // governs it) instead of paying a shuffle just to learn "too many
+      // keys"
       val nBandRows = phase("batchCount")(bSigs.count()) * index.bands
       val tooManyKeys = nBandRows > 32L * (maxInList + 1)
       val probeKeys =
@@ -231,78 +229,46 @@ object SrpIndex {
           corpusBands0.where(col("bp").isin(bps: _*) &&
             col("bkey").isin(probeKeys.toIndexedSeq: _*))
         } else corpusBands0
-      // fuse the guard with the candidate join's corpus leg: tag each
-      // matched corpus band row with its bucket's BATCH count (a long —
-      // linear in matched corpus rows, safe to materialize pre-guard,
-      // unlike anything pair-shaped), so the guard total is one sum over
-      // the tagged frame and the candidate join reuses it as its corpus
-      // side — the corpus band table is scanned and shuffled ONCE per
-      // probe instead of once for the guard and again for the join.
-      // (r20 ADVICE raised that the finally-block unpersist could force
-      // a recompute at the caller's terminal action: it cannot — the
-      // returned frame is Lineage.cut, i.e. eagerly materialized to a
-      // LogicalRDD inside the try block while `matched` is still
-      // cached, so the caller's action reads checkpointed rows and the
-      // once-per-probe claim holds for the whole call.)
-      val bCnt = bBands.groupBy("bkey").agg(count(lit(1)).as("bc"))
-      matched = corpusBands.select(col("doc_id").as("doc_b"), col("bkey"))
-        .join(bCnt, Seq("bkey"))
-        .persist(Lvl)
-      val cap = Dedup.candidatePairCap(spark)
-      if (cap > 0) {
-        val total = phase("guard")(
-          matched.agg(coalesce(sum("bc"), lit(0L))).head.getLong(0))
-        Dedup.enforceCandidateCap("srpSearchAgainst", total, cap,
-          matched.groupBy("bkey").agg(sum("bc").as("p"))
-            .orderBy(col("p").desc).limit(5).collect()
-            .map(r => r.getLong(0).toString -> r.getLong(1)).toSeq)
+      CandidatePairs.against("srpSearchAgainst",
+          bucketRows(bBands), bucketRows(corpusBands)) { c =>
+        // the sigs-pruning id list reads off the module's cached matched
+        // rows, so the pair join, its distinct, the hamming gate and the
+        // cosine verify all fuse lazily into the one terminal action
+        // below instead of being materialized mid-probe
+        val candIds = phase("candIds")(c.indexDocs.distinct()
+          .limit(maxInList + 1).collect().map(_.getLong(0)))
+        def prunedSigs(cols: Column*): DataFrame = {
+          val base = spark.read.parquet(s"${index.path}/sigs")
+          val pruned =
+            if (candIds.length <= maxInList) {
+              val dps = candIds.map(id => ((id % 16) + 16) % 16).distinct.toIndexedSeq
+              base.where(col("dp").isin(dps: _*) &&
+                col("doc_id").isin(candIds.toIndexedSeq: _*))
+            } else base
+          pruned.select(cols: _*)
+        }
+        val hamMax = Similarity.srpHamMax(h, threshold)
+        val survivors = c.pairs
+          .join(bSigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")),
+            "doc_a")
+          .join(prunedSigs(col("doc_id").as("doc_b"), col("sig").as("sb")),
+            "doc_b")
+          .where(graft.functions.VectorExpressions.hamming(
+            spark, col("sa"), col("sb")) <= hamMax)
+          .select("doc_a", "doc_b")
+        val out = survivors
+          .join(bSigs.select(col("doc_id").as("doc_a"), col("v").as("va"),
+            col("nrm").as("na")), "doc_a")
+          .join(prunedSigs(col("doc_id").as("doc_b"), col("v").as("vb"),
+            col("nrm").as("nb")), "doc_b")
+          .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_of"),
+            (Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
+              .as("cos"))
+          .where(col("cos") >= threshold)
+          .select(col("doc_id"), col("dup_of"), round(col("cos"), 6).as("sim"))
+        Lineage.cut(out)
       }
-      // a corpus doc appears in some candidate pair iff it has a row in
-      // `matched` (both mean "shares a band bucket with a batch doc"),
-      // so the sigs-pruning id list comes straight off the persisted
-      // matched frame — the pair join, its distinct, the hamming gate
-      // and the cosine verify then all fuse lazily into the caller's one
-      // terminal action instead of being materialized mid-probe
-      val candIds = phase("candIds")(matched.select("doc_b").distinct()
-        .limit(maxInList + 1).collect().map(_.getLong(0)))
-      val candidates = bBands.select(col("doc_id").as("doc_a"), col("bkey"))
-        .join(matched.select(col("doc_b"), col("bkey")), Seq("bkey"))
-        .select("doc_a", "doc_b").distinct()
-      def prunedSigs(cols: Column*): DataFrame = {
-        val base = spark.read.parquet(s"${index.path}/sigs")
-        val pruned =
-          if (candIds.length <= maxInList) {
-            val dps = candIds.map(id => ((id % 16) + 16) % 16).distinct.toIndexedSeq
-            base.where(col("dp").isin(dps: _*) &&
-              col("doc_id").isin(candIds.toIndexedSeq: _*))
-          } else base
-        pruned.select(cols: _*)
-      }
-      val hamMax = Similarity.srpHamMax(h, threshold)
-      val survivors = candidates
-        .join(bSigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")),
-          "doc_a")
-        .join(prunedSigs(col("doc_id").as("doc_b"), col("sig").as("sb")),
-          "doc_b")
-        .where(graft.functions.VectorExpressions.hamming(
-          spark, col("sa"), col("sb")) <= hamMax)
-        .select("doc_a", "doc_b")
-      val out = survivors
-        .join(bSigs.select(col("doc_id").as("doc_a"), col("v").as("va"),
-          col("nrm").as("na")), "doc_a")
-        .join(prunedSigs(col("doc_id").as("doc_b"), col("v").as("vb"),
-          col("nrm").as("nb")), "doc_b")
-        .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_of"),
-          (Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")))
-            .as("cos"))
-        .where(col("cos") >= threshold)
-        .select(col("doc_id"), col("dup_of"), round(col("cos"), 6).as("sim"))
-      Lineage.cut(out)
-    } finally {
-      bSigs.unpersist()
-      bBands.unpersist()
-      if (matched != null) { matched.unpersist(); () }
-    }
+    } finally { bSigs.unpersist(); bBands.unpersist(); () }
   }
 
   /** Semantic-dedup-on-ingest: score every arriving microbatch of

@@ -97,18 +97,21 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
     assert(got === Set(Seq(ts("01:00"), "k1", 1L), Seq(ts("02:00"), "k1", 3L)))
   }
 
-  test("asofMerge equals asof on sf0.001 events (real data, both time axes)") {
+  test("asofMerge equals asof on sf0.001 events (real data, three time axes)") {
     val events = EventTable(Tables.events(spark, "/root/testdata/sf0.001"), "ts", Some("user_id"))
-    val features = VersionedTable.fromEvents(
-      events.where(col("event_type") === "error"), "user_id",
+    val errors = events.where(col("event_type") === "error")
+    val features = VersionedTable.fromEvents(errors, "user_id",
       sum(expr("cast(round(value * 100) as bigint)")) -> "err_cents")
     val p = events.df.where(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"),
         (col("ts") + expr("INTERVAL 1 HOUR")).as("later"))
-    for (timeCol <- Seq("ts", "later")) {
-      val expected = AsOfReference(p, "user_id", timeCol, features)
+    // probes AT the version instants: only the inclusive boundary sees
+    // the error that changed the feature at that very instant
+    val atVersion = errors.df.select(col("user_id"), col("ts").as("at_version"))
+    for ((probes, timeCol) <- Seq((p, "ts"), (p, "later"), (atVersion, "at_version"))) {
+      val expected = AsOfReference(probes, "user_id", timeCol, features)
         .collect().map(_.toSeq).toSet
-      val got = AsOfJoin.asofMerge(p, "user_id", timeCol, features)
+      val got = AsOfJoin.asofMerge(probes, "user_id", timeCol, features)
         .collect().map(_.toSeq).toSet
       assert(got === expected, s"timeCol=$timeCol")
     }

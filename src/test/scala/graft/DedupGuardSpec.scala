@@ -1,9 +1,16 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{array, col, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.{Dedup, PipelineOps, Similarity}
+import graft.ext.{Dedup, DedupIndex, Multimodal, PipelineOps, Similarity, SrpIndex}
 import graft.sources.Tables
 
 /** Pins the candidate-volume guard (graceful degradation for
@@ -25,6 +32,45 @@ class DedupGuardSpec extends AnyFunSuite with SparkSpec {
     try body finally spark.conf.unset(Dedup.MaxCandidatePairsConf)
   }
 
+  private def withTempDir[T](body: String => T): T = {
+    val path = java.nio.file.Files.createTempDirectory("dedupguard").toString
+    try body(path)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+  }
+
+  private def vecsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      graft.functions.FeatureHash(spark, col("text"), 128).as("v"))
+
+  /** The aggregate functions of every plan `body` executes, the plans
+    * that build cached frames included, seen by a QueryExecutionListener.
+    * Listener events arrive in order, so once a sentinel query run after
+    * `body` has been seen, every query `body` ran has been recorded. */
+  private def aggregatesRunBy[T](body: => T): (T, Seq[String]) = {
+    val marker = "graft.dedupGuardSpec.sentinel"
+    def aggregates(plan: SparkPlan): Seq[String] = planNodes(plan).flatMap {
+      case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction.prettyName)
+      case m: InMemoryTableScanExec => aggregates(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    val seen = new ConcurrentLinkedQueue[String]()
+    val sentinel = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains(marker)) sentinel.countDown()
+        else aggregates(qe.executedPlan).foreach(seen.add)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.range(1).select(lit(marker)).collect()
+      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel query never reached the listener")
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("winnowNearDup aborts with the bucket diagnostic when the ceiling " +
       "is exceeded") {
     val docs = Tables.load(spark, sfDir, "documents")
@@ -42,24 +88,64 @@ class DedupGuardSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains(e.topBuckets.head._1))
   }
 
-  test("minhashNearDup aborts with the (band, bkey) bucket diagnostic") {
+  test("minhash, phash and both minhash probes abort naming band/key buckets") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val e = withCap(Some("5")) {
-      intercept[Dedup.CandidateVolumeExceeded] {
-        Dedup.minhashNearDup(docs, 0.7).count()
+    val corpus = docs.where(col("doc_id") % 2 === 0)
+    val batch = docs.where(col("doc_id") % 2 === 1)
+    withTempDir { path =>
+      DedupIndex.build(corpus, path)
+      val idx = DedupIndex.load(spark, path)
+      for ((op, run) <- Seq[(String, () => Long)](
+        "minhashNearDup" -> (() => Dedup.minhashNearDup(docs, 0.7).count()),
+        "phashNearDup" -> (() =>
+          Multimodal.phashNearDup(Multimodal.documentsAsMedia(docs)).count()),
+        "minhashNearDupAgainst" -> (() =>
+          Dedup.minhashNearDupAgainst(corpus, batch, 0.7).count()),
+        "dedupIndexSearchAgainst" -> (() =>
+          DedupIndex.searchAgainst(idx, batch, 0.7).count()))) {
+        val e = withCap(Some("5")) {
+          intercept[Dedup.CandidateVolumeExceeded](run())
+        }
+        assert(e.op === op)
+        assert(e.totalPairs > 5L, op)
+        assert(e.topBuckets.nonEmpty && e.topBuckets.forall(_._2 > 0), op)
+        assert(e.topBuckets.head._1.matches("\\d+/\\w+"),
+          s"$op buckets are named band/key: ${e.topBuckets.head._1}")
+        assert(e.getMessage.contains(e.topBuckets.head._1), op)
       }
     }
-    assert(e.op === "minhashNearDup")
-    assert(e.totalPairs > 5L)
-    assert(e.topBuckets.head._1.contains("/"),
-      "minhash buckets are named band/bkey")
+  }
+
+  test("a degenerate corpus trips the guard before any bucket list exists") {
+    val copies = 3000L
+    val hottest = copies * (copies - 1) / 2
+    val docs = spark.range(copies).select(col("id").as("doc_id"),
+      lit("the same boilerplate sentence copied across the whole crawl").as("text"))
+    val vecs = spark.range(copies).select(col("id").as("doc_id"),
+      array((1 to 128).map(i => lit((i % 7 + 1).toDouble)): _*).as("v"))
+    for ((op, run) <- Seq[(String, () => Long)](
+      "minhashNearDup" -> (() => Dedup.minhashNearDup(docs, 0.7).count()),
+      "srpNearDup" -> (() => Similarity.srpNearDup(vecs, 0.6, 128).count()))) {
+      val (e, aggregates) = aggregatesRunBy {
+        withCap(Some("1000000")) {
+          intercept[Dedup.CandidateVolumeExceeded](run())
+        }
+      }
+      assert(aggregates.nonEmpty, s"$op: the listener recorded no plan")
+      assert(!aggregates.contains("collect_list"),
+        s"$op built per-bucket lists before its guard: ${aggregates.distinct}")
+      assert(e.op === op)
+      val (bucket, pairs) = e.topBuckets.head
+      assert(pairs === hottest, s"$op: every copy shares the hottest bucket")
+      assert(bucket.matches("\\d+/-?\\w+"), s"$op bucket is named band/key: $bucket")
+      assert(e.getMessage.contains(op) && e.getMessage.contains(bucket))
+    }
   }
 
   test("srpNearDup aborts with the (band, bval) bucket diagnostic — " +
       "covering semanticDedup, which pairs exclusively through it") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val vecs = docs.select(col("doc_id"),
-      graft.functions.FeatureHash(spark, col("text"), 128).as("v"))
+    val vecs = vecsOf(docs)
     val e = withCap(Some("7")) {
       intercept[Dedup.CandidateVolumeExceeded] {
         Similarity.srpNearDup(vecs, 0.6, 128).count()
@@ -146,26 +232,35 @@ class DedupGuardSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("lots"))
   }
 
-  test("srp and containment fall through unchanged at the default ceiling") {
+  test("containment and the six banded operators fall through at the default cap") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val vecs = docs.select(col("doc_id"),
-      graft.functions.FeatureHash(spark, col("text"), 128).as("v"))
-    val srpDefault = withCap(None) {
-      Similarity.srpNearDup(vecs, 0.6, 128).collect().map(_.toSeq).toSet
+    val vecs = vecsOf(docs)
+    val even = col("doc_id") % 2 === 0
+    val odd = col("doc_id") % 2 === 1
+    withTempDir { dedupPath =>
+      withTempDir { srpPath =>
+        DedupIndex.build(docs.where(even), dedupPath)
+        val dedupIdx = DedupIndex.load(spark, dedupPath)
+        val srpIdx = SrpIndex.build(vecsOf(docs.where(even)), srpPath, dim = 128)
+        for ((op, run) <- Seq[(String, () => DataFrame)](
+          "srpNearDup" -> (() => Similarity.srpNearDup(vecs, 0.6, 128)),
+          "containmentPairs" -> (() => PipelineOps.containmentPairs(docs, 0.8)),
+          "minhashNearDup" -> (() => Dedup.minhashNearDup(docs, 0.7)),
+          "phashNearDup" -> (() =>
+            Multimodal.phashNearDup(Multimodal.documentsAsMedia(docs))),
+          "minhashNearDupAgainst" -> (() =>
+            Dedup.minhashNearDupAgainst(docs.where(even), docs.where(odd), 0.7)),
+          "dedupIndexSearchAgainst" -> (() =>
+            DedupIndex.searchAgainst(dedupIdx, docs.where(odd), 0.7)),
+          "srpSearchAgainst" -> (() =>
+            SrpIndex.searchAgainst(srpIdx, vecsOf(docs.where(odd)), 0.6)))) {
+          val underDefault = withCap(None)(run().collect().map(_.toSeq).toSet)
+          val disabled = withCap(Some("0"))(run().collect().map(_.toSeq).toSet)
+          assert(underDefault === disabled, op)
+          assert(underDefault.nonEmpty, op)
+        }
+      }
     }
-    val srpDisabled = withCap(Some("0")) {
-      Similarity.srpNearDup(vecs, 0.6, 128).collect().map(_.toSeq).toSet
-    }
-    assert(srpDefault === srpDisabled)
-    assert(srpDefault.nonEmpty)
-    val cDefault = withCap(None) {
-      PipelineOps.containmentPairs(docs, 0.8).collect().map(_.toSeq).toSet
-    }
-    val cDisabled = withCap(Some("0")) {
-      PipelineOps.containmentPairs(docs, 0.8).collect().map(_.toSeq).toSet
-    }
-    assert(cDefault === cDisabled)
-    assert(cDefault.nonEmpty)
   }
 
   test("default and disabled ceilings leave results unchanged") {

@@ -31,8 +31,11 @@ class StreamingAsOfSpec extends AnyFunSuite with SparkSpec {
       events.where(col("event_type") === "error"), "user_id",
       sum(expr("cast(round(value * 100) as bigint)")) -> "err_cents")
 
-    // probes: every user's purchase instants (an arbitrary interesting set)
-    val probeRows = events.df.where(col("event_type") === "purchase")
+    // probes: every user's purchase instants (an arbitrary interesting
+    // set) and every error instant — the features' own change times,
+    // where only an inclusive lookup sees the version at that instant
+    val probeRows = events.df
+      .where(col("event_type") === "purchase" || col("event_type") === "error")
       .select(col("user_id"), col("ts")).collect()
       .sortBy(r => (r.getTimestamp(1).getTime, r.getLong(0)))
       .zipWithIndex
